@@ -4,11 +4,15 @@ The reference has no vector operators; this is the training-data-pipeline
 extension (SURVEY.md §7 step 5) over the driver's ``embeddings`` fixture
 (vec_id bigint, embedding array<float>, label int).
 
-Everything is pure Column expressions — ``zip_with`` + ``aggregate`` for
-dot products stay inside JVM codegen; no per-row Python, no driver loops.
-The exact path is the correctness baseline (O(|Q|·|C|), broadcast the
-query side); the hyperplane-bucketed path is the 100 TB candidate
-generator (shuffle by bucket, never a cross join).
+Per-pair scoring is Column expressions — ``zip_with`` + ``aggregate``
+dot products stay inside JVM codegen, with no per-row Python and no
+driver loops. The Arrow-batched numpy paths (one Python call per batch)
+are the codebook assignment ``assign_argmax_cosine``, bit-identical to
+that fold and shared by every IVF, residual, Lloyd and SemDeDup site,
+and the float64-matmul variants (``cosine_topk_np``,
+``neardup_pairs_np``). The exact path is the correctness baseline
+(O(|Q|·|C|), broadcast the query side); the hyperplane-bucketed path is
+the 100 TB candidate generator (shuffle by bucket, never a cross join).
 """
 
 from __future__ import annotations
@@ -94,6 +98,117 @@ def paired_cosine(
     nb = F.col(nb) if isinstance(nb, str) else nb
     denom = na * nb
     return F.when(denom > 0, dot(va, vb) / denom).otherwise(F.lit(0.0))
+
+
+def assign_argmax_cosine(
+    df: DataFrame, vec_col: str, codebook: DataFrame
+) -> DataFrame:
+    """Assign every row of ``df`` to its highest-cosine codebook entry
+    — the ONE codebook assignment behind IVF routing, residual
+    encoding, cosine Lloyd and SemDeDup clustering.
+
+    ``codebook`` is (id, vector): its first two columns, any others
+    ignored. It must be parameter-bounded (nlist rows, ARCHITECTURE
+    rule 13): it is collected to the driver, sorted by ascending id and
+    shipped with the batch function. An empty codebook raises
+    ``ValueError``.
+
+    Output: every input row unchanged plus ``list_id`` (the winning
+    codebook id, in the codebook id's type) and ``best_cos`` (its
+    cosine) — one output row per input row, no groupBy, no join back.
+    Every ``vec_col`` must be a non-null vector of the codebook's
+    length (``ValueError`` otherwise); ``df`` must not already carry
+    ``list_id``/``best_cos``.
+
+    The cosines are bit-identical to :func:`paired_cosine` over
+    :func:`norm`: float32 elements widen to float64 exactly, each
+    product is one correctly-rounded double op, and every dot / squared
+    norm adds its products in dimension order starting from 0.0, as the
+    ``aggregate``/``zip_with`` fold does; a zero norm gives 0.0. The
+    argmax takes the FIRST maximum over the ascending ids, so ties go
+    to the smallest id — ``max_by`` keyed on ``struct(cos, -id)``.
+    Evidence: per-vector parity against that fold in
+    tests/test_vector_index.py, and the oracle for every query built
+    on it.
+
+    Why numpy over Arrow batches (``mapInArrow``: one Python call per
+    batch, the input columns passed back as the same Arrow arrays): the
+    interpreted fold costs ~0.3 ms per (vector, centroid) PAIR and
+    dominated q147's profile (80 s task time over 2.6 s wall at sf0.1,
+    ~70% GC from per-pair ``zip_with`` array churn); the JVM
+    unrolled-dot alternative measured slower still (SCALING.md r11
+    negative — JIT method-size cliff). One outer-product pass per
+    dimension over the whole batch removes both the lambda dispatch
+    and the per-pair allocations (q147 GC 57 s -> 1.4 s).
+    """
+    import numpy as np
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    cid_field, vec_field = codebook.schema.fields[:2]
+    crows = sorted(
+        codebook.select(cid_field.name, vec_field.name).collect(),
+        key=lambda r: r[0],
+    )
+    if not crows:
+        raise ValueError("assign_argmax_cosine: empty codebook")
+    cids = np.array([r[0] for r in crows])
+    cent = np.array([r[1] for r in crows], dtype=np.float64)
+    nlist, dim = cent.shape
+    cen_acc = np.zeros(nlist)
+    for j in range(dim):
+        cen_acc += cent[:, j] * cent[:, j]
+    cen = np.sqrt(cen_acc)
+    cid_type = to_arrow_type(cid_field.dataType)
+
+    def _assign(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            vecs = batch.column(vec_col)
+            if vecs.null_count or (np.asarray(vecs.value_lengths()) != dim).any():
+                raise ValueError(
+                    f"assign_argmax_cosine: every {vec_col} must be a "
+                    f"non-null {dim}-element vector, like the codebook"
+                )
+            cm = (
+                vecs.flatten()
+                .to_numpy(zero_copy_only=False)
+                .astype(np.float64)
+                .reshape(n, dim)
+            )
+            cn_acc = np.zeros(n)
+            for j in range(dim):
+                cn_acc += cm[:, j] * cm[:, j]
+            cn = np.sqrt(cn_acc)
+            acc = np.zeros((n, nlist))
+            for j in range(dim):
+                acc += cm[:, j, None] * cent[None, :, j]
+            denom = cn[:, None] * cen[None, :]
+            cos = np.where(
+                denom > 0.0, acc / np.where(denom == 0.0, 1.0, denom), 0.0
+            )
+            best = np.argmax(cos, axis=1)
+            yield pa.RecordBatch.from_arrays(
+                batch.columns
+                + [
+                    pa.array(cids[best], type=cid_type),
+                    pa.array(cos[np.arange(n), best]),
+                ],
+                names=batch.schema.names + ["list_id", "best_cos"],
+            )
+
+    schema = StructType(
+        df.schema.fields
+        + [
+            StructField("list_id", cid_field.dataType),
+            StructField("best_cos", DoubleType()),
+        ]
+    )
+    return df.mapInArrow(_assign, schema=schema)
 
 
 def cosine_topk(
@@ -448,14 +563,13 @@ def ivf_topk(
     ``centroids`` is the coarse codebook as a DataFrame (id, vector) —
     typically a deterministic sample of the corpus (a cheap, standard
     alternative to k-means training; pass trained centroids when you
-    have them). Assignment is one broadcast pass: corpus × |centroids|
-    cosine scores, ``max_by`` per vector (map-side partial — the
-    shuffle carries one (vector, list) row per input row). The probe
-    join is an equi-join on list_id: at scale the corpus is scanned
-    once for assignment, then each query reads ~nprobe/nlist of the
-    inverted lists — the IVF selectivity knob. A (query, neighbor) pair
-    can't repeat (each vector lives in exactly one list), so no dedup
-    is needed, unlike multi-table LSH.
+    have them). Assignment is one corpus pass through
+    :func:`assign_argmax_cosine` (O(|centroids|) per vector, no
+    shuffle). The probe join is an equi-join on list_id: at scale the
+    corpus is scanned once for assignment, then each query reads
+    ~nprobe/nlist of the inverted lists — the IVF selectivity knob. A
+    (query, neighbor) pair can't repeat (each vector lives in exactly
+    one list), so no dedup is needed, unlike multi-table LSH.
 
     Deterministic ties: assignment prefers the smaller centroid id;
     ranking breaks ties by neighbor_id. Output matches ``cosine_topk``:
@@ -471,16 +585,7 @@ def ivf_topk(
         F.col(vec_col).alias("cv"),
         norm(vec_col).alias("cn"),
     )
-    assign = (
-        c.crossJoin(F.broadcast(cent))
-        .withColumn("cos_c", paired_cosine("cv", "ce", "cn", "cen"))
-        .groupBy("neighbor_id")
-        .agg(
-            F.max_by("cid", F.struct(F.col("cos_c"), (-F.col("cid")).alias("nc")))
-            .alias("list_id")
-        )
-    )
-    inv = c.join(assign, "neighbor_id")
+    inv = assign_argmax_cosine(c, "cv", cent)
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
@@ -996,10 +1101,10 @@ def semdedup(
     lower cluster id, the keep rule drops the higher ``id_col``).
 
     Scale shape: the codebook is |labels| rows (parameter-bounded, the
-    same codebook contract as ``ivf_assignment_stats``), broadcast
-    once for assignment; the assignment is then MATERIALIZED (it feeds
-    both pair sides and the survivor join — un-cut, Catalyst re-runs
-    the scan + codebook join + rank window once per reference;
+    same codebook contract as ``ivf_assignment_stats``), assigned in
+    one pass by :func:`assign_argmax_cosine`; the assignment is then
+    MATERIALIZED (it feeds both pair sides and the survivor join —
+    un-cut, Catalyst re-runs the scan + assignment once per reference;
     ``checkpoint_dir`` upgrades the cut to a durable parquet
     checkpoint for cluster-scale fault tolerance). The only pair join
     is WITHIN clusters (equi on cluster id, range on id): density n²/k
@@ -1020,27 +1125,18 @@ def semdedup(
                 lambda x: x.centroid,
             ).alias("__cvec")
         )
-        .withColumn("__cnrm", norm("__cvec"))
     )
     v = df.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__e"),
     ).withColumn("__nrm", norm("__e"))
-    scored = v.join(F.broadcast(cen)).withColumn(
-        "__cos", paired_cosine("__e", "__cvec", "__nrm", "__cnrm")
-    )
-    pick = Window.partitionBy("__id").orderBy(
-        F.col("__cos").desc(), F.col("__cl")
-    )
-    assigned = (
-        scored.withColumn("__rn", F.row_number().over(pick))
-        .filter(F.col("__rn") == 1)
-        .select("__id", F.col("__cl").alias("__cluster"), "__e", "__nrm",
-                F.col("__cos").alias("__cos_c"))
+    assigned = assign_argmax_cosine(v, "__e", cen).select(
+        "__id", F.col("list_id").alias("__cluster"), "__e", "__nrm",
+        F.col("best_cos").alias("__cos_c"),
     )
     # The assignment feeds THREE consumers (both pair sides + the
     # survivor join); un-materialized, Catalyst re-runs the scan +
-    # codebook join + rank window once per reference. Cut lineage at
+    # assignment once per reference. Cut lineage at
     # the chokepoint: localCheckpoint by default, durable parquet when
     # checkpoint_dir is set (the cluster-scale fault-tolerance path).
     assigned = materialize(assigned, checkpoint_dir, label="semdedup-assign")

@@ -15,12 +15,13 @@ the IVF selectivity: probing ``nprobe`` of ``nlist`` lists compiles to
 other lists' files (asserted in tests). Per-vector norms are computed
 at build time and stored, so probes skip them entirely.
 
-Build cost is one corpus pass (broadcast codebook, max_by assignment,
-one partitioned write). Probe cost is |probed lists| scan + one
-equi-join — no corpus shuffle. The same layout serves any number of
-query batches until the corpus changes; rebuilds are full rewrites
-(an incremental variant would route new vectors to their list
-directory, the same append shape as `streaming/dedup_index.py`).
+Build cost is one corpus pass (the shared numpy codebook assignment
+``similarity.assign_argmax_cosine``, then one partitioned write). Probe
+cost is |probed lists| scan + one equi-join — no corpus shuffle. The
+same layout serves any number of query batches until the corpus
+changes; rebuilds are full rewrites (an incremental variant would route
+new vectors to their list directory, the same append shape as
+`streaming/dedup_index.py`).
 """
 
 from __future__ import annotations
@@ -31,7 +32,11 @@ from pyspark.sql import functions as F
 from db_cdc_poc_spark.checkpointing import materialize
 from db_cdc_poc_spark.sources.exchange import local_df
 from db_cdc_poc_spark.partitioning import spread_scan as _spread
-from db_cdc_poc_spark.operators.similarity import norm, paired_cosine
+from db_cdc_poc_spark.operators.similarity import (
+    assign_argmax_cosine,
+    norm,
+    paired_cosine,
+)
 
 # Offset added to every vector element before floor-micro-scaling in
 # the Lloyd mean updates: keeps every scaled term positive so Spark's
@@ -150,37 +155,25 @@ def residualize(
     fine quantizer must cover).
 
     ``coarse_centroids`` is (``list_id``, ``vec_col``) and parameter-
-    bounded (nlist rows, ARCHITECTURE rule 13), so the assignment is a
-    broadcast cross join: one corpus pass, O(nlist) per row, no pair
-    join. Output: (``id_col``, ``list_id``, ``vec_col``=residual).
+    bounded (nlist rows, ARCHITECTURE rule 13): one corpus pass through
+    :func:`assign_argmax_cosine`, O(nlist) per row, then a broadcast
+    equi-join fetches the winning centroid. Output: (``id_col``,
+    ``list_id``, ``vec_col``=residual).
     """
     cent = coarse_centroids.select(
         F.col("list_id").alias("__cid"),
         F.col(vec_col).cast("array<double>").alias("__ce"),
-        norm(vec_col).alias("__cen"),
     )
     c = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-        norm(vec_col).alias("__vn"),
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
     )
-    tie = F.struct(F.col("__cos"), (-F.col("__cid")).alias("nc"))
-    best = (
-        c.crossJoin(F.broadcast(cent))
-        .withColumn("__cos", paired_cosine("__v", "__ce", "__vn", "__cen"))
-        .groupBy(id_col)
-        .agg(
-            F.max_by("__cid", tie).alias("list_id"),
-            F.max_by("__ce", tie).alias("__bce"),
-            # __v is constant within the group (one row per centroid);
-            # max_by keeps the form deterministic anyway
-            F.max_by("__v", tie).alias("__v"),
-        )
-    )
-    return best.select(
+    best = assign_argmax_cosine(c, "__v", cent)
+    return best.join(
+        F.broadcast(cent), best["list_id"] == cent["__cid"]
+    ).select(
         F.col(id_col),
         "list_id",
-        F.zip_with("__v", "__bce", lambda a, b: a - b).alias(vec_col),
+        F.zip_with("__v", "__ce", lambda a, b: a - b).alias(vec_col),
     )
 
 
@@ -360,25 +353,11 @@ def refine_centroids(
         ).collect()
     )
     _check_mean_range(train, vec_col, "refine_centroids training cohort")
-    t = train.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-        norm(vec_col).alias("__vn"),
-    )
+    t = train.select(F.col(vec_col).cast("array<double>").alias("__v"))
     off = int(_MEAN_OFFSET) * _MEAN_SCALE
     for _ in range(max(0, iters)):
-        cent = local_df(
-            spark, cur, "list_id long, ce array<double>"
-        ).withColumn("cen", norm("ce"))
-        tie = F.struct(F.col("__cos"), (-F.col("list_id")).alias("nc"))
-        asg = (
-            t.crossJoin(F.broadcast(cent))
-            .withColumn("__cos", paired_cosine("__v", "ce", "__vn", "cen"))
-            .groupBy("__id")
-            .agg(
-                F.max_by("list_id", tie).alias("list_id"),
-                F.max_by("__v", tie).alias("__v"),
-            )
+        asg = assign_argmax_cosine(
+            t, "__v", local_df(spark, cur, "cid long, ce array<double>")
         )
         rows = (
             asg.select("list_id", F.posexplode("__v").alias("pos", "val"))
@@ -654,89 +633,26 @@ def ivf_assignment_stats(
     maintenance, where assignments never go stale but the codebook
     stops matching the data.
 
-    Plan: corpus scan -> numpy-batched argmax assignment (mapInPandas,
-    driver-collected codebook of nlist rows, an algorithm parameter;
-    sequential-order accumulation keeps every cosine bit-identical to
-    the expression fold, see the inline comment) -> one
-    groupBy(list_id). Linear in the corpus, O(nlist) per row — which
-    means ``centroids`` MUST be a parameter-bounded sample (fixed
-    nlist), same contract as ``ivf_topk``/``IvfIndex.build``: a
-    codebook derived as a fixed FRACTION of the corpus makes the
-    assignment quadratic (n * n/16 pairs — measured pathological at
-    60k vectors), exactly the degenerate case the q43-family big-SF
-    exclusions document. Corpus ids are expected unique (the earlier
-    per-vector groupBy collapsed exact duplicate ids; this form counts
-    each corpus ROW once) and embeddings non-null.
+    Plan: corpus scan -> :func:`assign_argmax_cosine` (numpy-batched,
+    bit-identical to the expression fold) -> one groupBy(list_id).
+    Linear in the corpus, O(nlist) per row — which means ``centroids``
+    MUST be a parameter-bounded sample (fixed nlist), same contract as
+    ``ivf_topk``/``IvfIndex.build``: a codebook derived as a fixed
+    FRACTION of the corpus makes the assignment quadratic (n * n/16
+    pairs — measured pathological at 60k vectors), exactly the
+    degenerate case the q43-family big-SF exclusions document.
+    Embeddings must be non-null. Corpus ids must be unique: the report
+    counts each corpus ROW, so a duplicated id would count twice —
+    checked with one count-vs-distinct aggregate, ``ValueError`` if not.
     """
-    import numpy as np
-
-    # The assignment is numpy-vectorized inside mapInPandas with
-    # SEQUENTIAL-ORDER accumulation, bit-identical to the
-    # aggregate/zip_with fold it replaces: float32 elements widen to
-    # float64 exactly, each product is one correctly-rounded double op
-    # on both paths, and the dim loop adds products in the same order
-    # starting from 0.0 — so every cosine, and hence every downstream
-    # ppm integer, hashes identically (asserted element-for-element in
-    # tests/test_round14_fixes.py and by the oracle). Motivation (guide
-    # §4.2: batch native kernels beat per-row JVM expressions): the
-    # interpreted fold costs ~0.3 ms per (vector, centroid) PAIR and
-    # dominated q147's profile (80 s task-time over 2.6 s wall at
-    # sf0.1, ~70% GC from per-pair zip_with array churn); the JVM
-    # unrolled-dot alternative measured SLOWER still (SCALING.md r11
-    # negative — JIT method-size cliff). One outer-product pass per
-    # dim over the whole Arrow batch removes both the lambda dispatch
-    # and the per-pair allocations. Centroids are parameter-bounded by
-    # contract (nlist, never a corpus fraction), so collecting them to
-    # the driver is the same boundedness bet the broadcast made.
-    crows = sorted(
-        centroids.select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("ce")
-        ).collect(),
-        key=lambda r: r.cid,
-    )
-    if not crows:
-        raise ValueError("ivf_assignment_stats: empty centroid set")
-    cids_np = np.array([r.cid for r in crows])
-    cent_mat = np.array([r.ce for r in crows], dtype=np.float64)
-    nlist, dim = cent_mat.shape
-    cen_acc = np.zeros(nlist)
-    for j in range(dim):
-        cen_acc += cent_mat[:, j] * cent_mat[:, j]
-    cen_np = np.sqrt(cen_acc)
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-
-    def _assign(pdfs):
-        import pandas as pd
-
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            n = cm.shape[0]
-            cn_acc = np.zeros(n)
-            for j in range(dim):
-                cn_acc += cm[:, j] * cm[:, j]
-            cn = np.sqrt(cn_acc)
-            acc = np.zeros((n, nlist))
-            for j in range(dim):
-                acc += cm[:, j, None] * cent_mat[None, :, j]
-            denom = cn[:, None] * cen_np[None, :]
-            cos = np.where(
-                denom > 0.0, acc / np.where(denom == 0.0, 1.0, denom), 0.0
-            )
-            # first max along sorted-ascending cids == ties to min cid,
-            # the max_by(cid, struct(cos, -cid)) rule
-            best = np.argmax(cos, axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["neighbor_id"],
-                    "is_new": pdf["is_new"],
-                    "list_id": cids_np[best],
-                    "best_cos": cos[np.arange(n), best],
-                }
-            )
-
+    dup = corpus.agg(
+        F.count(id_col).alias("n"), F.count_distinct(id_col).alias("nd")
+    ).first()
+    if dup.n != dup.nd:
+        raise ValueError(
+            f"ivf_assignment_stats: {dup.n - dup.nd} duplicate "
+            f"{id_col} values in the corpus; ids must be unique"
+        )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
@@ -748,12 +664,8 @@ def ivf_assignment_stats(
     # assignment onto 2 cores — the measured r10 sf10 cost (134.9 s;
     # repartition to cluster width = 12x on the same pass, SCALING.md
     # round-11 entry)
-    assign = _spread(c).mapInPandas(
-        _assign,
-        schema=(
-            f"neighbor_id {id_type}, is_new boolean, "
-            f"list_id {id_type}, best_cos double"
-        ),
+    assign = assign_argmax_cosine(
+        _spread(c), "cv", centroids.select(id_col, vec_col)
     )
     per_list = assign.groupBy("list_id").agg(
         F.count(F.lit(1)).alias("n_vectors"),
@@ -788,6 +700,21 @@ def ivf_assignment_stats(
     return out
 
 
+def _routed(c: DataFrame, cent: DataFrame) -> DataFrame:
+    """(neighbor_id, cv, cn) rows plus their ``list_id``, laid out for
+    the partitioned lists write. No spread before the scoring: the
+    numpy kernel costs microseconds per row, so the scan's own width is
+    enough, and a small batch starts one Python worker, not one per
+    core. The REBALANCE by list lets AQE size the write tasks: a list
+    is written as a few right-sized files, not one file per scan or
+    spread task — fewer files for every later probe to open."""
+    return (
+        assign_argmax_cosine(c, "cv", cent)
+        .drop("best_cos")
+        .hint("rebalance", "list_id")
+    )
+
+
 class IvfIndex:
     """Handle to a built index directory (see module docstring)."""
 
@@ -806,10 +733,10 @@ class IvfIndex:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> "IvfIndex":
-        """One corpus pass: broadcast the codebook, assign each vector
-        to its argmax-cosine list (ties to the smaller centroid id —
-        same rule as ``ivf_topk``), write lists partitioned by
-        ``list_id`` with norms precomputed."""
+        """One corpus pass: assign each vector to its argmax-cosine
+        list (:func:`assign_argmax_cosine`, ties to the smaller
+        centroid id — same rule as ``ivf_topk``), write lists
+        partitioned by ``list_id`` with norms precomputed."""
         cent = centroids.select(
             F.col(id_col).alias("cid"),
             F.col(vec_col).alias("ce"),
@@ -820,19 +747,9 @@ class IvfIndex:
             F.col(vec_col).alias("cv"),
             norm(vec_col).alias("cn"),
         )
-        assign = (
-            _spread(c).crossJoin(F.broadcast(cent))
-            .withColumn("cos_c", paired_cosine("cv", "ce", "cn", "cen"))
-            .groupBy("neighbor_id")
-            .agg(
-                F.max_by(
-                    "cid", F.struct(F.col("cos_c"), (-F.col("cid")).alias("nc"))
-                ).alias("list_id")
-            )
-        )
         out = path.rstrip("/")
         cent.write.mode("overwrite").parquet(f"{out}/centroids")
-        c.join(assign, "neighbor_id").write.partitionBy("list_id").mode(
+        _routed(c, cent).write.partitionBy("list_id").mode(
             "overwrite"
         ).parquet(f"{out}/lists")
         idx = IvfIndex(out, id_col, vec_col)
@@ -856,19 +773,7 @@ class IvfIndex:
             F.col(self.vec_col).alias("cv"),
             norm(self.vec_col).alias("cn"),
         )
-        assign = (
-            _spread(c).crossJoin(F.broadcast(cent))
-            .withColumn("cos_c", paired_cosine("cv", "ce", "cn", "cen"))
-            .groupBy("neighbor_id")
-            .agg(
-                F.max_by(
-                    "cid", F.struct(F.col("cos_c"), (-F.col("cid")).alias("nc"))
-                ).alias("list_id")
-            )
-        )
-        routed = materialize(
-            c.join(assign, "neighbor_id"), label="ivf-append-routed"
-        )
+        routed = materialize(_routed(c, cent), label="ivf-append-routed")
         routed.write.partitionBy("list_id").mode("append").parquet(
             f"{self.path}/lists"
         )
@@ -1018,36 +923,37 @@ class IvfIndex:
         ``n_misassigned`` is provably 0) and the partials' row total
         equals the lists' (a torn append leaves the sketch short).
         Otherwise — recluster, external retrain, torn write — the full
-        scan below answers: lists scan -> broadcast codebook cross
-        join (build side = nlist rows, an algorithm parameter) -> one
-        groupBy(list_id). No corpus self-join, no collect.
+        scan below answers: lists scan -> :func:`assign_argmax_cosine`
+        against the stored codebook (nlist rows, an algorithm
+        parameter) for ``best_cid`` -> a left broadcast equi-join to the
+        member's own centroid for ``own_cos`` -> one groupBy(list_id).
+        No corpus self-join, no corpus collect.
         """
         cent = spark.read.parquet(f"{self.path}/centroids")
         lists = spark.read.parquet(f"{self.path}/lists")
         fast = self._drift_report_from_sketch(spark, lists)
         if fast is not None:
             return fast
-        best = (
-            _spread(lists).crossJoin(F.broadcast(cent))
-            .withColumn("cos_c", paired_cosine("cv", "ce", "cn", "cen"))
-            .groupBy("neighbor_id", "list_id")
-            .agg(
-                F.max_by(
-                    "cid", F.struct(F.col("cos_c"), (-F.col("cid")).alias("nc"))
-                ).alias("best_cid"),
-                # cosine to the list the vector actually lives in.
-                # max(when(...)) — NOT max_by on a 0/1 flag, which ties
-                # at 0 for EVERY centroid when the list's id is absent
-                # from the stored codebook (the external-retrain case
-                # this report exists to catch) and returns an arbitrary
-                # centroid's cosine; this form yields NULL own_cos for
-                # such orphaned lists, deterministically
-                F.max(
-                    F.when(F.col("cid") == F.col("list_id"), F.col("cos_c"))
-                ).alias("own_cos"),
-            )
+        best = assign_argmax_cosine(
+            _spread(lists.withColumnRenamed("list_id", "__own")), "cv", cent
+        ).select(
+            "cv", "cn", "__own", F.col("list_id").alias("best_cid")
         )
-        per_list = best.groupBy("list_id").agg(
+        # cosine to the list the vector actually lives in: a LEFT join,
+        # so a list whose id is absent from the stored codebook (the
+        # external-retrain case this report exists to catch) gets a
+        # deterministic NULL own_cos rather than some centroid's cosine
+        own = best.join(
+            F.broadcast(cent), best["__own"] == cent["cid"], "left"
+        ).select(
+            F.col("__own").alias("list_id"),
+            "best_cid",
+            F.when(
+                F.col("cid").isNotNull(),
+                paired_cosine("cv", "ce", "cn", "cen"),
+            ).alias("own_cos"),
+        )
+        per_list = own.groupBy("list_id").agg(
             F.count(F.lit(1)).alias("n_vectors"),
             # ppm-scaled BEFORE summing: exact integer running sum,
             # order-independent — the repo's float-aggregation rule;
@@ -1123,7 +1029,17 @@ class IvfIndex:
         seeds = cent_all.filter(F.col("cid").isin(list_ids)).select(
             F.col("cid").alias(self.id_col), F.col("ce").alias(self.vec_col)
         )
-        train = members.select(
+        # one row per MEMBER (not member × old_list): copies of one
+        # vector across several selected lists — the transient state a
+        # crash between this method's two writes leaves behind —
+        # collapse before training and re-assignment, so a recluster
+        # that selects the duplicate-holding lists is the dedup repair.
+        # old_list survives as min() purely for the `moved` stat.
+        unique = (
+            members.groupBy("neighbor_id", "cv", "cn")
+            .agg(F.min("list_id").alias("old_list"))
+        )
+        train = unique.select(
             F.col("neighbor_id").alias(self.id_col),
             F.col("cv").alias(self.vec_col),
         )
@@ -1146,26 +1062,10 @@ class IvfIndex:
             spark, updated_rows, "cid long, ce array<double>, cen double"
         )
         # re-assign the touched members among the FULL updated codebook
-        # grouped by MEMBER (not member × old_list): copies of one
-        # vector across several selected lists — the transient state a
-        # crash between this method's two writes leaves behind —
-        # collapse to a single re-assigned row, so a recluster that
-        # selects the duplicate-holding lists is the dedup repair.
-        # old_list survives as min() purely for the `moved` stat.
-        reassigned = (
-            members.select("neighbor_id", "cv", "cn",
-                           F.col("list_id").alias("old_list"))
-            .crossJoin(F.broadcast(full_cent))
-            .withColumn("cos_c", paired_cosine("cv", "ce", "cn", "cen"))
-            .groupBy("neighbor_id", "cv", "cn")
-            .agg(
-                F.max_by(
-                    "cid", F.struct(F.col("cos_c"), (-F.col("cid")).alias("nc"))
-                ).alias("list_id"),
-                F.min("old_list").alias("old_list"),
-            )
+        reassigned = materialize(
+            assign_argmax_cosine(unique, "cv", full_cent).drop("best_cos"),
+            label="recluster-assign",
         )
-        reassigned = materialize(reassigned, label="recluster-assign")
         stats = reassigned.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum((F.col("list_id") != F.col("old_list")).cast("long")).alias(

@@ -18,6 +18,8 @@ availableNow drains them.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -82,6 +84,34 @@ def cdc_docs(snapshots: DataFrame) -> DataFrame:
 def write_topic_files(docs: DataFrame, path: str, n_files: int = 4) -> str:
     """Materialize a doc stream as JSON-lines files — the engine's
     file-based stand-in for a Kafka topic. n_files > 1 lets
-    maxFilesPerTrigger split the replay into micro-batches (T4)."""
-    docs.repartition(n_files).write.mode("overwrite").json(path)
+    maxFilesPerTrigger split the replay into micro-batches (T4).
+
+    The files are a topic in EVENT-TIME order, as a broker replay
+    would deliver it: file i holds the i-th event-time range, and its
+    modification time follows that order (the file source lists the
+    oldest file first). Event time is ``date_time`` for
+    :func:`transaction_docs` and the envelope's ``ts_ms`` for
+    :func:`cdc_docs`. A round-robin split would spread every file over
+    the whole time range, so one-file triggers deliver later files
+    behind the dedup watermark and the stream drops them as late.
+    """
+    et = (
+        F.col("date_time")
+        if "date_time" in docs.columns
+        else F.get_json_object("value", "$.ts_ms").cast("long")
+    )
+    docs.repartitionByRange(n_files, et).write.mode("overwrite").json(path)
+    spark = docs.sparkSession
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    parts = sorted(
+        (st.getPath() for st in fs.listStatus(jpath)
+         if st.getPath().getName().startswith("part-")),
+        key=lambda p: p.getName(),
+    )
+    # part-NNNNN follows the range partition id; space the mtimes 1 s
+    # apart, ending now, so the listing order cannot tie
+    now_ms = int(time.time() * 1000)
+    for i, part in enumerate(parts):
+        fs.setTimes(part, now_ms - (len(parts) - i) * 1000, -1)
     return path

@@ -7,12 +7,19 @@ row count, schema (column names), and an order-insensitive value hash
 mirroring the driver's documented comparison). Queries without an
 oracle get a rows-only check (runs + row count printed).
 
-Usage: python scripts/check_oracle.py [query ...]
+Usage: python scripts/check_oracle.py [--out FILE] [query ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01)
+
+``--out FILE`` also writes the report to FILE. It is written to
+``FILE.tmp`` and renamed into place only after the ``ran N of N``
+footer, so FILE is either a complete report or absent — never a
+truncated one.
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
 import hashlib
 import os
 import sys
@@ -47,10 +54,30 @@ def _value_hash(rows, colnames) -> str:
     return h.hexdigest()[:16]
 
 
+class _Tee:
+    """A stdout that also writes, line-flushed, to the report file."""
+
+    def __init__(self, *streams):
+        self.streams = streams
+
+    def write(self, s):
+        for st in self.streams:
+            st.write(s)
+            st.flush()
+        return len(s)
+
+    def flush(self):
+        for st in self.streams:
+            st.flush()
+
+
 def main() -> int:
-    only = set(sys.argv[1:])
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--out", help="also write the report to this file")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    only = set(args.queries)
     qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     # Fail fast on typoed names: a silently-empty selection would print
     # "ALL GREEN" and exit 0 — a vacuous pass from the primary gate.
     unknown = sorted(only - set(qs))
@@ -59,6 +86,24 @@ def main() -> int:
         print("unknown query names: " + ", ".join(unknown))
         print("FAILURES: unknown query names (nothing ran)")
         return 1
+    if not args.out:
+        return run(qs, only)
+    tmp = f"{args.out}.tmp"
+    try:
+        with open(tmp, "w") as fh, contextlib.redirect_stdout(
+            _Tee(sys.stdout, fh)
+        ):
+            rc = run(qs, only)
+    except BaseException:
+        os.remove(tmp)
+        raise
+    # run() returned, so the "ran N of N" footer is in the file
+    os.replace(tmp, args.out)
+    return rc
+
+
+def run(qs, only: set[str]) -> int:
+    oracles = entrymod.oracle_sql()
     spark = get_spark(cpus=8)
     con = duckdb.connect()
     # big-SF oracle runs (the exact pair-join replays) need to spill:

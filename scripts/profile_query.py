@@ -20,6 +20,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import _force_full_eval  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -44,16 +46,6 @@ def _get_spark_with_eventlog():
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     return builder.getOrCreate(), evdir
-
-
-def _force_full_eval(df) -> int:
-    from pyspark.sql import functions as F
-
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(F.struct(*[F.col(c) for c in df.columns]))).alias("ck"),
-    ).collect()[0]
-    return row["n"]
 
 
 def profile(names: list[str]) -> None:

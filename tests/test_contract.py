@@ -51,8 +51,9 @@ def test_oracle_audit_artifact_matches_registry():
     (VERDICT r5: the artifact lagged the registry by one query when a
     query landed after the audit ran; this pins them together so the
     evidence can't go stale silently). Regenerate with
-    `python scripts/check_oracle.py > ORACLE_LOCAL_r<N>.txt` after ANY
-    registry change."""
+    `python scripts/check_oracle.py --out ORACLE_LOCAL_r<N>.txt` after
+    ANY registry change (``--out`` renames the file into place only
+    after the closing footer, so an interrupted run leaves none)."""
     import re
     from pathlib import Path
 
@@ -82,6 +83,7 @@ def test_check_oracle_rejects_unknown_names():
     typoed name produced a vacuous 'ALL GREEN' with exit 0."""
     import subprocess
     import sys
+    import tempfile
     from pathlib import Path
 
     repo = Path(__file__).resolve().parent.parent
@@ -94,3 +96,16 @@ def test_check_oracle_rejects_unknown_names():
     # stable substrings, not the incidental repr of a Python list
     assert "unknown" in proc.stdout and "q999_nonexistent" in proc.stdout
     assert "ALL GREEN" not in proc.stdout
+
+    # with --out, a run that never reaches the footer leaves no report
+    # (and no half-written temp file) behind
+    with tempfile.TemporaryDirectory() as d:
+        out = Path(d) / "ORACLE_LOCAL_test.txt"
+        proc = subprocess.run(
+            [sys.executable, str(repo / "scripts" / "check_oracle.py"),
+             "--out", str(out), "q999_nonexistent"],
+            capture_output=True, text=True, timeout=120,
+        )
+        assert proc.returncode == 1, proc.stdout + proc.stderr
+        assert "q999_nonexistent" in proc.stdout
+        assert list(Path(d).iterdir()) == []

@@ -103,66 +103,6 @@ def test_scaled_spread_target_bounds(spark):
 # -- 4: local_df hardening ------------------------------------------------------
 
 
-# -- 5: numpy IVF assignment is bit-identical to the expression fold ---------
-
-
-def test_ivf_numpy_assignment_bit_exact(spark):
-    """The mapInPandas assignment (sequential-order numpy accumulation)
-    must reproduce the aggregate/zip_with fold's cosines BIT-exactly —
-    same products, same summation order, correctly-rounded sqrt/div —
-    including the ties-to-min-cid argmax rule."""
-    from db_cdc_poc_spark.operators.similarity import norm, paired_cosine
-    from db_cdc_poc_spark.operators.vector_index import ivf_assignment_stats
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    cents = emb.filter(F.col("vec_id") % 8 == 0)
-
-    # reference: the expression-fold path the operator used before
-    cent = cents.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        norm("embedding").alias("cen"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cv"),
-        norm("embedding").alias("cn"),
-    )
-    ref = (
-        c.crossJoin(F.broadcast(cent))
-        .withColumn("cos_c", paired_cosine("cv", "ce", "cn", "cen"))
-        .groupBy("neighbor_id")
-        .agg(
-            F.max_by(
-                "cid", F.struct(F.col("cos_c"), (-F.col("cid")).alias("nc"))
-            ).alias("list_id"),
-            F.max("cos_c").alias("best_cos"),
-        )
-    )
-    ref_per_list = {
-        r.list_id: (r.n, r.cs)
-        for r in ref.groupBy("list_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.round((F.col("best_cos") + 1) * 1_000_000, 0).cast("long")
-            ).alias("cs"),
-        )
-        .collect()
-    }
-    got = {
-        r.list_id: (r.n_vectors, r.avg_cos_ppm)
-        for r in ivf_assignment_stats(emb, cents).collect()
-    }
-    assert set(got) == set(ref_per_list)
-    for lid, (n, cs) in ref_per_list.items():
-        gn, gavg = got[lid]
-        assert gn == n
-        # avg_cos_ppm = cos_sum div n - 1e6, replayed from the exact sums
-        assert gavg == cs // n - 1_000_000, lid
-    assert sum(n for n, _ in got.values()) == emb.count()
-
-
 def test_local_df_rejects_dict_rows(spark):
     with pytest.raises(TypeError, match="dict"):
         local_df(spark, [{"a": 1}], "a long")

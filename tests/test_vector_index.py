@@ -386,3 +386,157 @@ def test_recluster_auto_selects_misassigned_and_noops_when_healthy(spark):
     assert idx.drift_report(spark).filter(
         F.col("n_misassigned") > 0
     ).count() == 0
+
+
+# -- the shared argmax-cosine codebook assignment ----------------------------
+
+
+def _fold_assignment(corpus, codebook):
+    """Reference: the expression-fold assignment every IVF, residual,
+    Lloyd and SemDeDup site used before the shared kernel — broadcast
+    cross join, ``paired_cosine`` per (vector, centroid) pair, and a
+    per-vector ``max_by`` keyed on (cos, -cid): ties to the smaller
+    id. Returns {vec_id: (list_id, best_cos)}."""
+    from db_cdc_poc_spark.operators.similarity import norm, paired_cosine
+
+    cent = codebook.select(
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("ce"),
+        norm("embedding").alias("cen"),
+    )
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cv"),
+        norm("embedding").alias("cn"),
+    )
+    ref = (
+        c.crossJoin(F.broadcast(cent))
+        .withColumn("cos_c", paired_cosine("cv", "ce", "cn", "cen"))
+        .groupBy("neighbor_id")
+        .agg(
+            F.max_by(
+                "cid", F.struct(F.col("cos_c"), (-F.col("cid")).alias("nc"))
+            ).alias("list_id"),
+            F.max("cos_c").alias("best_cos"),
+        )
+    )
+    return {r.neighbor_id: (r.list_id, r.best_cos) for r in ref.collect()}
+
+
+def test_argmax_cosine_kernel_matches_fold_per_vector(spark):
+    """Per-vector parity of ``assign_argmax_cosine`` with the fold it
+    replaced: the same ``list_id`` and the same ``best_cos`` BITS for
+    every vector. Planted edge cases: an exact tie (a copy of centroid
+    8 under the SMALLER id -5, so every member of 8 must route to -5),
+    a zero centroid (cosine 0.0 against everything) and a zero vector
+    (cosine 0.0 against every centroid: the smallest id, -10, wins)."""
+    import struct
+
+    from db_cdc_poc_spark.operators.similarity import assign_argmax_cosine
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    dim = len(emb.first().embedding)
+    schema = emb.schema
+    corpus = emb.unionByName(
+        spark.createDataFrame([(-1, [0.0] * dim)], schema)
+    )
+    c8 = emb.filter(F.col("vec_id") == 8).first().embedding
+    codebook = emb.filter(F.col("vec_id") % 8 == 0).unionByName(
+        spark.createDataFrame([(-5, c8), (-10, [0.0] * dim)], schema)
+    )
+
+    ref = _fold_assignment(corpus, codebook)
+    got_rows = assign_argmax_cosine(corpus, "embedding", codebook).collect()
+    got = {r.vec_id: (r.list_id, r.best_cos) for r in got_rows}
+
+    # one output row per input row, input columns passed through
+    assert len(got_rows) == len(got) == corpus.count()
+    src = {r.vec_id: r.embedding for r in corpus.collect()}
+    assert all(r.embedding == src[r.vec_id] for r in got_rows)
+
+    bits = lambda x: struct.pack("<d", x)  # noqa: E731
+    assert set(got) == set(ref)
+    for vid, (lid, cos) in ref.items():
+        assert got[vid][0] == lid, vid
+        assert bits(got[vid][1]) == bits(cos), vid
+    # the planted cases took the branches they were planted for
+    assert got[-1] == (-10, 0.0)
+    assert got[8][0] == -5
+    assert all(lid != 8 for lid, _ in got.values())
+
+
+def test_argmax_cosine_kernel_rejects_empty_codebook(spark):
+    from db_cdc_poc_spark.operators.similarity import assign_argmax_cosine
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    with pytest.raises(ValueError, match="empty codebook"):
+        assign_argmax_cosine(emb, "embedding", emb.limit(0))
+
+
+def test_ivf_numpy_assignment_bit_exact(spark):
+    """The mapInPandas assignment (sequential-order numpy accumulation)
+    must reproduce the aggregate/zip_with fold's cosines BIT-exactly —
+    same products, same summation order, correctly-rounded sqrt/div —
+    including the ties-to-min-cid argmax rule."""
+    from db_cdc_poc_spark.operators.similarity import norm, paired_cosine
+    from db_cdc_poc_spark.operators.vector_index import ivf_assignment_stats
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    cents = emb.filter(F.col("vec_id") % 8 == 0)
+
+    # reference: the expression-fold path the operator used before
+    cent = cents.select(
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("ce"),
+        norm("embedding").alias("cen"),
+    )
+    c = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cv"),
+        norm("embedding").alias("cn"),
+    )
+    ref = (
+        c.crossJoin(F.broadcast(cent))
+        .withColumn("cos_c", paired_cosine("cv", "ce", "cn", "cen"))
+        .groupBy("neighbor_id")
+        .agg(
+            F.max_by(
+                "cid", F.struct(F.col("cos_c"), (-F.col("cid")).alias("nc"))
+            ).alias("list_id"),
+            F.max("cos_c").alias("best_cos"),
+        )
+    )
+    ref_per_list = {
+        r.list_id: (r.n, r.cs)
+        for r in ref.groupBy("list_id")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                F.round((F.col("best_cos") + 1) * 1_000_000, 0).cast("long")
+            ).alias("cs"),
+        )
+        .collect()
+    }
+    got = {
+        r.list_id: (r.n_vectors, r.avg_cos_ppm)
+        for r in ivf_assignment_stats(emb, cents).collect()
+    }
+    assert set(got) == set(ref_per_list)
+    for lid, (n, cs) in ref_per_list.items():
+        gn, gavg = got[lid]
+        assert gn == n
+        # avg_cos_ppm = cos_sum div n - 1e6, replayed from the exact sums
+        assert gavg == cs // n - 1_000_000, lid
+    assert sum(n for n, _ in got.values()) == emb.count()
+
+
+def test_assignment_stats_rejects_duplicate_ids(spark):
+    """Corpus ids must be unique (the report counts each ROW): a
+    duplicated id raises instead of silently double-counting."""
+    from db_cdc_poc_spark.operators.vector_index import ivf_assignment_stats
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    cents = emb.filter(F.col("vec_id") % 16 == 0)
+    dup = emb.unionByName(emb.filter(F.col("vec_id") == 3))
+    with pytest.raises(ValueError, match="duplicate vec_id"):
+        ivf_assignment_stats(dup, cents)
