@@ -7722,27 +7722,28 @@ def q172_kafka_wire_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     register(spark)
     sink = f"q172_sink_{uuid.uuid4().hex[:8]}"
     from db_cdc_poc_spark.streaming.ephemeral import (
+        discard_ephemeral_dir,
         ephemeral_checkpoint_dir,
-        ephemeral_stream_confs,
     )
 
-    with ephemeral_stream_confs(spark):
-        q = (
-            spark.readStream.format("kafka_wire")
-            .option("path", log)
-            .option("startingOffsets", "earliest")
-            .option("maxOffsetsPerTrigger", "64")
-            .load()
-            .writeStream.format("memory")
-            .queryName(sink)
-            .trigger(processingTime="50 milliseconds")
-            .option("checkpointLocation", ephemeral_checkpoint_dir("ckpt_q172_"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    checkpoint = ephemeral_checkpoint_dir("ckpt_q172_")
+    q = (
+        spark.readStream.format("kafka_wire")
+        .option("path", log)
+        .option("startingOffsets", "earliest")
+        .option("maxOffsetsPerTrigger", "64")
+        .load()
+        .writeStream.format("memory")
+        .queryName(sink)
+        .trigger(processingTime="50 milliseconds")
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        discard_ephemeral_dir(checkpoint)
     return spark.table(sink).select(
         "partition",
         "offset",

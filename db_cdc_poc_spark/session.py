@@ -49,6 +49,19 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else min(16g, half of physical RAM):
+    16g on hosts with 32 GB or more, never a heap the host cannot back."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # pragma: no cover - non-POSIX
+        return "16g"
+    return f"{min(16 << 10, (phys // 2) >> 20)}m"
+
+
 #: Marker conf recording a shuffle-partitions value chosen explicitly in
 #: ``get_spark`` (arg or env). ``apply_runtime_confs`` honors it instead
 #: of re-pinning the default, so registry-driven query calls don't
@@ -92,7 +105,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )

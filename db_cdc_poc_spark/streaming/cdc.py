@@ -23,13 +23,16 @@ columns.
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from db_cdc_poc_spark.operators.cdc import latest_by_key
+from db_cdc_poc_spark.streaming.ephemeral import (
+    drain_foreach_batch,
+    ephemeral_checkpoint_dir,
+)
 from db_cdc_poc_spark.streaming.state import (
     BucketedStateTable,
     unify_schemas,
@@ -266,8 +269,6 @@ def stream_apply_changes(
     no double application (asserted in the restart test). This is the
     fault-tolerance contract (T6) the reference delegates to DLT.
     """
-    from db_cdc_poc_spark.streaming.ephemeral import ephemeral_checkpoint_dir
-
     target = CdcTarget(
         state_path or ephemeral_checkpoint_dir("cdc_state_"),
         keys=keys,
@@ -277,43 +278,14 @@ def stream_apply_changes(
         tie_breakers=tie_breakers,
         num_buckets=num_buckets,
     )
-    static = spark.read.parquet(source_path)
-    reader = spark.readStream.schema(static.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(source_path)
-    checkpoint = checkpoint_path or ephemeral_checkpoint_dir("ckpt_cdc_")
-    if checkpoint_path is None:
-        # throwaway checkpoint: skip the 4.1 checksum sidecars (see
-        # streaming/ephemeral.py); a caller-provided checkpoint is the
-        # RESUMABLE contract and keeps the integrity default
-        from db_cdc_poc_spark.streaming.ephemeral import ephemeral_stream_confs
-
-        ctx = ephemeral_stream_confs(spark)
-    else:
-        from contextlib import nullcontext
-
-        ctx = nullcontext()
-    try:
-        with ctx:
-            q = (
-                stream.writeStream.foreachBatch(
-                    lambda batch, epoch: target.upsert_batch(batch, epoch)
-                )
-                .trigger(availableNow=True)
-                .option("checkpointLocation", checkpoint)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if checkpoint_path is None:
-            # throwaway checkpoint only; a caller-provided path is the
-            # resumable contract and must survive
-            from db_cdc_poc_spark.streaming.ephemeral import (
-                discard_ephemeral_dir,
-            )
-
-            discard_ephemeral_dir(checkpoint)
+    drain_foreach_batch(
+        spark,
+        source_path,
+        target.upsert_batch,
+        "cdc",
+        max_files_per_trigger,
+        checkpoint_path=checkpoint_path,
+    )
     return target.current(spark)
 
 

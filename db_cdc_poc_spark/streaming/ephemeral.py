@@ -1,24 +1,46 @@
-"""Session confs for EPHEMERAL streaming checkpoints.
+"""The engine's one synchronous streaming drain, and its scratch.
 
-Spark 4.1 writes a checksum sidecar for every streaming-checkpoint file
+Every file-stream job in ``streaming/`` runs the same way: read a
+parquet directory as a file stream (:func:`_read_parquet_stream`),
+build the streaming frame, and drain it with an ``availableNow``
+trigger — start, await, return (:func:`_drain`). Two entry points
+differ only in the sink:
+
+* :func:`drain_to_memory` — memory sink; returns the sink table as a
+  batch DataFrame (dedup, windows, sessions, joins, enrichment);
+* :func:`drain_foreach_batch` — ``foreachBatch`` sink; the caller's
+  function owns the result (fanout, incremental gold, CDC apply).
+
+Checkpoint. A drain's checkpoint is throwaway scratch from
+:func:`ephemeral_checkpoint_dir`, released in ``finally`` when the
+drain returns — the sink already holds the rows and nothing resumes.
+Only a ``foreachBatch`` drain may instead be given a durable
+``checkpoint_path`` (the resumable CDC apply): that one is never
+released and keeps every session default.
+
+Checksum sidecars. Spark 4.1 writes a checksum sidecar for every
+streaming-checkpoint file
 (``spark.sql.streaming.checkpoint.fileChecksum.enabled``, default true)
 and every state-store delta-file creation BLOCKS on the sidecar's
 future (``ChecksumCheckpointFileManager.createWithChecksum`` →
 ``awaitResult`` — verified by thread dump: all 32 task threads parked
-there during a drain). For a checkpoint that outlives the query — a
-resumable CDC apply, a production continuous stream — that integrity
-check is worth its cost. For the engine's synchronous DRAINS
-(availableNow → memory/foreachBatch sink, checkpoint in a throwaway
-tempdir that nothing ever reads back, let alone resumes), it buys
-nothing and measured ~1.8x on the whole drain (5.2s → 2.9s for the
-sf0.1 events dedup drain at 32 state partitions; the per-task wait is
-~1.4s of pure parking).
+there during a drain). For a checkpoint that outlives the query that
+integrity check is worth its cost; for a throwaway drain checkpoint it
+buys nothing and measured ~1.8x on the whole drain (5.2s → 2.9s for
+the sf0.1 events dedup drain at 32 state partitions; the per-task wait
+is ~1.4s of pure parking). :func:`_drain_confs` scopes the opt-out
+to the drain: the conf is read at STREAM START, so setting it around
+start()/awaitTermination and restoring afterwards leaves durable
+checkpoints on the safe default. Sessions older than Spark 4.1 simply
+carry an unused conf key.
 
-``ephemeral_stream_confs`` scopes the opt-out to the drain: the conf
-is read at STREAM START, so setting it around start()/awaitTermination
-and restoring afterwards leaves durable-checkpoint callers (anyone
-passing their own ``checkpoint_path``) on the safe default. Sessions
-older than Spark 4.1 simply carry an unused conf key.
+Width rule, taken from the sink type. A memory-sink drain runs its
+state/shuffle partitions at ``clamp(ceil(bytes / 256 KB), 1, session
+width)`` of the parquet directory it reads (:func:`_drain_width`):
+per-partition state-store costs dominate tiny drains. A
+``foreachBatch`` drain keeps the session width: it holds no streaming
+state, and its batch function's joins and writes are ordinary batch
+work. A durable checkpoint gets neither the confs nor the release.
 """
 
 from __future__ import annotations
@@ -27,9 +49,12 @@ import atexit
 import os
 import shutil
 import tempfile
-from contextlib import contextmanager
+import uuid
+from collections.abc import Callable
+from contextlib import contextmanager, nullcontext
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 #: Minimum free bytes a RAM-backed base must have BEFORE we put scratch
 #: on it (``$SPARK_GRAFT_EPHEMERAL_MIN_FREE`` overrides). tmpfs pages
@@ -110,6 +135,7 @@ def discard_ephemeral_dir(path: str | None) -> None:
         _CREATED_DIRS.remove(path)
         shutil.rmtree(path, ignore_errors=True)
 
+
 #: Confs a throwaway drain flips, with their drain-time values.
 #: Currently just the checksum sidecar opt-out.
 #:
@@ -131,27 +157,22 @@ _EPHEMERAL_CONFS = {
 }
 
 
-#: Input bytes per state/shuffle partition for a synchronous drain
-#: (``$SPARK_GRAFT_DRAIN_TASK_BYTES`` overrides). Stateful operators pay
-#: per-PARTITION fixed costs every micro-batch (state-store provider
-#: init, delta+commit file per partition), so a tiny drain at the
-#: session's full shuffle width spends more on state bookkeeping than on
-#: rows: q30 at sf0.1 measured 1.31 s at 32 partitions vs 0.94 s at 8.
-#: At sf1+ the scaled target reaches the session value and nothing
-#: changes. Only THROWAWAY drains use this — resumable checkpoints must
-#: keep a constant partition count across runs and never come here.
-_DRAIN_TASK_BYTES_ENV = "SPARK_GRAFT_DRAIN_TASK_BYTES"
-_DEFAULT_DRAIN_TASK_BYTES = 256 << 10
+#: Input bytes per state/shuffle partition for a memory-sink drain.
+#: Stateful operators pay per-PARTITION fixed costs every micro-batch
+#: (state-store provider init, delta+commit file per partition), so a
+#: tiny drain at the session's full shuffle width spends more on state
+#: bookkeeping than on rows: q30 at sf0.1 measured 1.31 s at 32
+#: partitions vs 0.94 s at 8. At sf1+ the scaled width reaches the
+#: session value and nothing changes.
+_DRAIN_TASK_BYTES = 256 << 10
 
 
-def drain_shuffle_partitions(spark: SparkSession, source_path: str) -> int | None:
-    """Size-scaled shuffle/state partition count for a throwaway drain
-    of ``source_path``; None (leave the session value) when the source
-    cannot be sized."""
+def _drain_width(spark: SparkSession, source_path: str) -> int:
+    """Size-scaled shuffle/state partition count for a memory-sink
+    drain of ``source_path``; the session value when the source cannot
+    be sized."""
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     try:
-        per = int(
-            os.environ.get(_DRAIN_TASK_BYTES_ENV, _DEFAULT_DRAIN_TASK_BYTES)
-        )
         total = 0
         if os.path.isfile(source_path):
             total = os.path.getsize(source_path)
@@ -160,22 +181,19 @@ def drain_shuffle_partitions(spark: SparkSession, source_path: str) -> int | Non
                 total += sum(
                     os.path.getsize(os.path.join(root, f)) for f in files
                 )
-        if total <= 0:
-            return None
-        cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        return max(1, min(cur, -(-total // max(1, per))))
-    except Exception:
-        return None
+    except OSError:
+        return cur
+    if total <= 0:
+        return cur
+    return max(1, min(cur, -(-total // _DRAIN_TASK_BYTES)))
 
 
 @contextmanager
-def ephemeral_stream_confs(
-    spark: SparkSession, shuffle_partitions: int | None = None
-):
+def _drain_confs(spark: SparkSession, shuffle_partitions: int | None):
     """Disable throwaway-checkpoint overhead for the duration of a
     synchronous drain; restores the previous settings on exit.
     ``shuffle_partitions`` additionally scopes a size-scaled state/
-    shuffle width to the drain (see :func:`drain_shuffle_partitions`)."""
+    shuffle width to the drain (see :func:`_drain_width`)."""
     confs = dict(_EPHEMERAL_CONFS)
     if shuffle_partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
@@ -197,3 +215,87 @@ def ephemeral_stream_confs(
                     spark.conf.set(k, old)
             except Exception:  # pragma: no cover - conf access locked down
                 pass
+
+
+def _read_parquet_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """``path`` as a file stream, schema taken from a batch read of the
+    same directory (file streams cannot infer one)."""
+    static = spark.read.parquet(path)
+    reader = spark.readStream.schema(static.schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(path)
+
+
+def _drain(
+    stream: DataFrame,
+    name: str,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    shuffle_partitions: int | None = None,
+    checkpoint_path: str | None = None,
+) -> None:
+    """Start ``sink(stream.writeStream)`` with an availableNow trigger
+    and wait for it. Without ``checkpoint_path`` the checkpoint is
+    throwaway scratch: drain confs scoped to the run, released in
+    ``finally``. A given ``checkpoint_path`` is durable: session confs,
+    never released."""
+    spark = stream.sparkSession
+    if checkpoint_path is None:
+        checkpoint = ephemeral_checkpoint_dir(f"ckpt_{name}_")
+        ctx = _drain_confs(spark, shuffle_partitions)
+    else:
+        checkpoint, ctx = checkpoint_path, nullcontext()
+    try:
+        with ctx:
+            q = (
+                sink(stream.writeStream)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", checkpoint)
+                .start()
+            )
+            q.awaitTermination()
+    finally:
+        if checkpoint_path is None:
+            discard_ephemeral_dir(checkpoint)
+
+
+def drain_to_memory(
+    spark: SparkSession,
+    source_path: str,
+    build: Callable[[DataFrame], DataFrame],
+    name: str,
+    output_mode: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Drain ``build(<file stream of source_path>)`` into a uniquely
+    named memory sink at the size-scaled width; returns the sink table
+    as a batch DataFrame."""
+    table = f"{name}_{uuid.uuid4().hex[:8]}"
+    _drain(
+        build(_read_parquet_stream(spark, source_path, max_files_per_trigger)),
+        name,
+        lambda w: w.format("memory").queryName(table).outputMode(output_mode),
+        shuffle_partitions=_drain_width(spark, source_path),
+    )
+    return spark.table(table)
+
+
+def drain_foreach_batch(
+    spark: SparkSession,
+    source_path: str,
+    fn: Callable[[DataFrame, int], None],
+    name: str,
+    max_files_per_trigger: int | None = None,
+    checkpoint_path: str | None = None,
+) -> None:
+    """Drain the file stream of ``source_path`` through
+    ``foreachBatch(fn)`` at the session width. ``checkpoint_path``
+    makes the drain resumable (see :func:`_drain`)."""
+    _drain(
+        _read_parquet_stream(spark, source_path, max_files_per_trigger),
+        name,
+        lambda w: w.foreachBatch(fn),
+        checkpoint_path=checkpoint_path,
+    )

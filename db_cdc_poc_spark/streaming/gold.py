@@ -30,7 +30,6 @@ the silver stream's job (T2), not gold's.
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +37,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from db_cdc_poc_spark.sources.exchange import local_df
+from db_cdc_poc_spark.streaming.ephemeral import (
+    drain_foreach_batch,
+    ephemeral_checkpoint_dir,
+)
 from db_cdc_poc_spark.streaming.state import BucketedStateTable
 
 
@@ -343,33 +346,13 @@ def stream_gold_inventory(
     final table. Equals the batch gold recompute over the same inputs
     regardless of micro-batch boundaries (asserted in tests across >=3
     batches with ``maxFilesPerTrigger=1``)."""
-    from db_cdc_poc_spark.streaming.ephemeral import ephemeral_checkpoint_dir
-
     gold = IncrementalGold(
         state_path or ephemeral_checkpoint_dir("gold_state_"),
         snapshot,
         keys=keys,
         num_buckets=num_buckets,
     )
-    static = spark.read.parquet(changes_path)
-    reader = spark.readStream.schema(static.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(changes_path)
-    from db_cdc_poc_spark.streaming.ephemeral import (
-        ephemeral_checkpoint_dir,
-        ephemeral_stream_confs,
+    drain_foreach_batch(
+        spark, changes_path, gold.apply_changes_batch, "gold", max_files_per_trigger
     )
-
-    checkpoint = ephemeral_checkpoint_dir("ckpt_gold_")
-    with ephemeral_stream_confs(spark):
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda batch, epoch: gold.apply_changes_batch(batch, epoch)
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-        q.awaitTermination()
     return gold.current(spark)

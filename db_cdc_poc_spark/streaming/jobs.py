@@ -16,55 +16,11 @@ narrowing it.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _drain_to_memory(
-    agg: DataFrame,
-    prefix: str,
-    output_mode: str,
-    source_path: str | None = None,
-) -> DataFrame:
-    """Shared drain mechanics for the synchronous streaming jobs: write
-    the streaming frame to a uniquely-named memory sink with an
-    availableNow trigger and a throwaway checkpoint, wait for the drain,
-    and read the sink back as a batch DataFrame. Centralized so a fix
-    to the drain (checkpoint handling, error surfacing) lands once."""
-    from db_cdc_poc_spark.streaming.ephemeral import (
-        discard_ephemeral_dir,
-        drain_shuffle_partitions,
-        ephemeral_checkpoint_dir,
-        ephemeral_stream_confs,
-    )
-
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    checkpoint = ephemeral_checkpoint_dir(f"ckpt_{prefix}_")
-    parts = (
-        drain_shuffle_partitions(agg.sparkSession, source_path)
-        if source_path is not None
-        else None
-    )
-    try:
-        with ephemeral_stream_confs(agg.sparkSession, shuffle_partitions=parts):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", checkpoint)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # the drain is synchronous and the memory sink holds the rows;
-        # nothing ever resumes from this checkpoint — release the
-        # (RAM-backed) scratch now, not at process exit
-        discard_ephemeral_dir(checkpoint)
-    return agg.sparkSession.table(name)
+from db_cdc_poc_spark.streaming.ephemeral import drain_foreach_batch, drain_to_memory
 
 
 def stream_dedup_keys(
@@ -84,14 +40,15 @@ def stream_dedup_keys(
     Scale: dropDuplicates state is one entry per key in the state
     store, partitioned by key hash; the watermark bounds its lifetime.
     """
-    static = spark.read.parquet(source_path)
-    stream = spark.readStream.schema(static.schema).parquet(source_path)
-    deduped = (
-        stream.withWatermark(watermark_col, watermark_delay)
+    return drain_to_memory(
+        spark,
+        source_path,
+        lambda s: s.withWatermark(watermark_col, watermark_delay)
         .dropDuplicates(list(keys))
-        .select(*keys)
+        .select(*keys),
+        "dedup_keys",
+        "append",
     )
-    return _drain_to_memory(deduped, "dedup_keys", "append", source_path)
 
 
 def stream_windowed_counts(
@@ -117,15 +74,16 @@ def stream_windowed_counts(
     """
     from pyspark.sql import functions as F
 
-    static = spark.read.parquet(source_path)
-    stream = spark.readStream.schema(static.schema).parquet(source_path)
-    agg = stream.groupBy(F.window(ts_col, window).alias("w")).agg(
-        F.count("*").alias("n"),
-        F.sum(F.round(F.col(value_col) * 100, 0)).cast("long").alias("value_cents"),
-    )
-    return _drain_to_memory(agg, "win_counts", "complete", source_path).select(
-        F.col("w.start").alias("window_start"), "n", "value_cents"
-    )
+    return drain_to_memory(
+        spark,
+        source_path,
+        lambda s: s.groupBy(F.window(ts_col, window).alias("w")).agg(
+            F.count("*").alias("n"),
+            F.sum(F.round(F.col(value_col) * 100, 0)).cast("long").alias("value_cents"),
+        ),
+        "win_counts",
+        "complete",
+    ).select(F.col("w.start").alias("window_start"), "n", "value_cents")
 
 
 def stream_session_counts(
@@ -149,15 +107,18 @@ def stream_session_counts(
     """
     from pyspark.sql import functions as F
 
-    static = spark.read.parquet(source_path)
-    stream = spark.readStream.schema(static.schema).parquet(source_path)
-    agg = stream.groupBy(
-        key_col, F.session_window(F.col(ts_col), gap).alias("w")
-    ).agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.round(F.col(value_col) * 100, 0)).cast("long").alias("total_cents"),
-    )
-    return _drain_to_memory(agg, "sess_counts", "complete", source_path).select(
+    return drain_to_memory(
+        spark,
+        source_path,
+        lambda s: s.groupBy(
+            key_col, F.session_window(F.col(ts_col), gap).alias("w")
+        ).agg(
+            F.count("*").alias("n_events"),
+            F.sum(F.round(F.col(value_col) * 100, 0)).cast("long").alias("total_cents"),
+        ),
+        "sess_counts",
+        "complete",
+    ).select(
         key_col,
         F.col("w.start").alias("session_start"),
         F.col("w.end").alias("session_end"),
@@ -193,17 +154,16 @@ def stream_session_counts_append(
     """
     from pyspark.sql import functions as F
 
-    static = spark.read.parquet(source_path)
-    reader = spark.readStream.schema(static.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(source_path)
-    agg = (
-        stream.withWatermark(ts_col, watermark_delay)
+    return drain_to_memory(
+        spark,
+        source_path,
+        lambda s: s.withWatermark(ts_col, watermark_delay)
         .groupBy(key_col, F.session_window(F.col(ts_col), gap).alias("w"))
-        .agg(F.count("*").alias("n_events"))
-    )
-    return _drain_to_memory(agg, "sess_append", "append", source_path).select(
+        .agg(F.count("*").alias("n_events")),
+        "sess_append",
+        "append",
+        max_files_per_trigger,
+    ).select(
         key_col,
         F.col("w.start").alias("session_start"),
         F.col("w.end").alias("session_end"),
@@ -241,33 +201,33 @@ def stream_stream_join(
     """
     import pyspark.sql.functions as F
 
-    static = spark.read.parquet(source_path)
-    stream = spark.readStream.schema(static.schema).parquet(source_path)
-    left = (
-        stream.filter(F.col(type_col) == left_type)
-        .select(
-            F.col("event_id").alias("l_id"),
-            F.col(key_col).alias("l_key"),
-            F.col(ts_col).alias("l_ts"),
+    def join(stream: DataFrame) -> DataFrame:
+        left = (
+            stream.filter(F.col(type_col) == left_type)
+            .select(
+                F.col("event_id").alias("l_id"),
+                F.col(key_col).alias("l_key"),
+                F.col(ts_col).alias("l_ts"),
+            )
+            .withWatermark("l_ts", watermark_delay)
         )
-        .withWatermark("l_ts", watermark_delay)
-    )
-    right = (
-        stream.filter(F.col(type_col) == right_type)
-        .select(
-            F.col("event_id").alias("r_id"),
-            F.col(key_col).alias("r_key"),
-            F.col(ts_col).alias("r_ts"),
+        right = (
+            stream.filter(F.col(type_col) == right_type)
+            .select(
+                F.col("event_id").alias("r_id"),
+                F.col(key_col).alias("r_key"),
+                F.col(ts_col).alias("r_ts"),
+            )
+            .withWatermark("r_ts", watermark_delay)
         )
-        .withWatermark("r_ts", watermark_delay)
-    )
-    joined = left.join(
-        right,
-        F.expr(
-            f"l_key = r_key AND r_ts >= l_ts AND r_ts <= l_ts + interval {join_window}"
-        ),
-    ).select("l_id", "r_id", F.col("l_key").alias("user_id"), "l_ts", "r_ts")
-    return _drain_to_memory(joined, "ss_join", "append")
+        return left.join(
+            right,
+            F.expr(
+                f"l_key = r_key AND r_ts >= l_ts AND r_ts <= l_ts + interval {join_window}"
+            ),
+        ).select("l_id", "r_id", F.col("l_key").alias("user_id"), "l_ts", "r_ts")
+
+    return drain_to_memory(spark, source_path, join, "ss_join", "append")
 
 
 def stream_enrich(
@@ -286,12 +246,15 @@ def stream_enrich(
     sink; output = events + the selected dim columns (inner)."""
     import pyspark.sql.functions as F
 
-    static = spark.read.parquet(source_path)
-    stream = spark.readStream.schema(static.schema).parquet(source_path)
-    enriched = stream.join(F.broadcast(dim), on).select(
-        "event_id", on, "event_type", *dim_cols
+    return drain_to_memory(
+        spark,
+        source_path,
+        lambda s: s.join(F.broadcast(dim), on).select(
+            "event_id", on, "event_type", *dim_cols
+        ),
+        "enrich",
+        "append",
     )
-    return _drain_to_memory(enriched, "enrich", "append")
 
 
 def stream_dedup_keys_within_watermark(
@@ -315,14 +278,15 @@ def stream_dedup_keys_within_watermark(
     output key set equals batch DISTINCT exactly — which is what the
     oracle checks; production narrows the delay to its real dup window.
     """
-    static = spark.read.parquet(source_path)
-    stream = spark.readStream.schema(static.schema).parquet(source_path)
-    deduped = (
-        stream.withWatermark(watermark_col, watermark_delay)
+    return drain_to_memory(
+        spark,
+        source_path,
+        lambda s: s.withWatermark(watermark_col, watermark_delay)
         .dropDuplicatesWithinWatermark(list(keys))
-        .select(*keys)
+        .select(*keys),
+        "dedup_wm",
+        "append",
     )
-    return _drain_to_memory(deduped, "dedup_wm", "append")
 
 
 def stream_fanout(
@@ -345,11 +309,6 @@ def stream_fanout(
     transactional). Readers see each sink as a parquet table
     partitioned by batch_id.
     """
-    static = spark.read.parquet(source_path)
-    reader = spark.readStream.schema(static.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(source_path)
 
     def _write_batch(df: DataFrame, batch_id: int) -> None:
         df.persist()
@@ -359,21 +318,6 @@ def stream_fanout(
         finally:
             df.unpersist()
 
-    from db_cdc_poc_spark.streaming.ephemeral import (
-        discard_ephemeral_dir,
-        ephemeral_checkpoint_dir,
-        ephemeral_stream_confs,
+    drain_foreach_batch(
+        spark, source_path, _write_batch, "fanout", max_files_per_trigger
     )
-
-    checkpoint = ephemeral_checkpoint_dir("ckpt_fanout_")
-    try:
-        with ephemeral_stream_confs(spark):
-            q = (
-                stream.writeStream.foreachBatch(_write_batch)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", checkpoint)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        discard_ephemeral_dir(checkpoint)

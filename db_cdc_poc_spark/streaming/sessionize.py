@@ -19,13 +19,13 @@ Python work is Arrow-batched per user group — no row-at-a-time UDF.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from db_cdc_poc_spark.streaming.ephemeral import drain_to_memory
 
 OUTPUT_SCHEMA = "user_id bigint, event_id bigint, ts timestamp, session_seq int"
 STATE_SCHEMA = "last_us bigint, seq int"
@@ -70,42 +70,22 @@ def stream_sessionize(
     """File stream -> per-user applyInPandasWithState session fold ->
     memory sink; returns every event's session assignment after the
     availableNow drain."""
-    static = spark.read.parquet(source_path)
-    reader = spark.readStream.schema(static.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(source_path).select("user_id", "event_id", "ts")
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        _session_fold(gap_seconds),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return drain_to_memory(
+        spark,
+        source_path,
+        lambda s: s.select("user_id", "event_id", "ts")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _session_fold(gap_seconds),
+            outputStructType=OUTPUT_SCHEMA,
+            stateStructType=STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
+        "sess",
+        "update",
+        max_files_per_trigger,
     )
-    from db_cdc_poc_spark.streaming.ephemeral import (
-        discard_ephemeral_dir,
-        drain_shuffle_partitions,
-        ephemeral_checkpoint_dir,
-        ephemeral_stream_confs,
-    )
-
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
-    checkpoint = ephemeral_checkpoint_dir("ckpt_sess_")
-    parts = drain_shuffle_partitions(spark, source_path)
-    try:
-        with ephemeral_stream_confs(spark, shuffle_partitions=parts):
-            q = (
-                sessions.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", checkpoint)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        discard_ephemeral_dir(checkpoint)
-    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -177,38 +157,18 @@ def stream_sessionize_tws(
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     proc_cls = type("SessionProcessor", (_SessionProcessor, StatefulProcessor), {})
-    static = spark.read.parquet(source_path)
-    reader = spark.readStream.schema(static.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(source_path).select("user_id", "event_id", "ts")
-    sessions = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc_cls(gap_seconds),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
+    return drain_to_memory(
+        spark,
+        source_path,
+        lambda s: s.select("user_id", "event_id", "ts")
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            statefulProcessor=proc_cls(gap_seconds),
+            outputStructType=OUTPUT_SCHEMA,
+            outputMode="Update",
+            timeMode="None",
+        ),
+        "sess_tws",
+        "update",
+        max_files_per_trigger,
     )
-    from db_cdc_poc_spark.streaming.ephemeral import (
-        discard_ephemeral_dir,
-        drain_shuffle_partitions,
-        ephemeral_checkpoint_dir,
-        ephemeral_stream_confs,
-    )
-
-    name = f"sessions_tws_{uuid.uuid4().hex[:8]}"
-    checkpoint = ephemeral_checkpoint_dir("ckpt_sess_tws_")
-    parts = drain_shuffle_partitions(spark, source_path)
-    try:
-        with ephemeral_stream_confs(spark, shuffle_partitions=parts):
-            q = (
-                sessions.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", checkpoint)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        discard_ephemeral_dir(checkpoint)
-    return spark.table(name)

@@ -104,7 +104,7 @@ def main() -> int:
 
 def run(qs, only: set[str]) -> int:
     oracles = entrymod.oracle_sql()
-    spark = get_spark(cpus=8)
+    spark = get_spark()
     con = duckdb.connect()
     # big-SF oracle runs (the exact pair-join replays) need to spill:
     # an in-memory connection without a temp_directory can only grow

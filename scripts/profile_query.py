@@ -28,14 +28,18 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def _get_spark_with_eventlog():
     from pyspark.sql import SparkSession
 
-    from db_cdc_poc_spark.session import RUNTIME_CONFS, default_parallelism
+    from db_cdc_poc_spark.session import (
+        RUNTIME_CONFS,
+        default_driver_memory,
+        default_parallelism,
+    )
 
     evdir = tempfile.mkdtemp(prefix="spark_events_")
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.appName("profile")
         .master(f"local[{cpus}]")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.eventLog.enabled", "true")

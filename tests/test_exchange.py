@@ -10,6 +10,7 @@ import pytest
 from db_cdc_poc_spark.sources.exchange import (
     DriverExchangeTooLarge,
     collect_rows,
+    local_df,
     to_json_strings,
     to_pandas,
 )
@@ -37,3 +38,21 @@ def test_to_json_strings_roundtrip(spark):
     )
     [doc] = to_json_strings(df)
     assert json.loads(doc) == {"id": 1, "s": "a", "arr": [1, 2]}
+
+
+def test_local_df_rejects_dict_rows(spark):
+    with pytest.raises(TypeError, match="dict"):
+        local_df(spark, [{"a": 1}], "a long")
+
+
+def test_local_df_counts_nested_schema_columns(spark):
+    df = local_df(
+        spark,
+        [({"k": 1}, [1, 2], 3)],
+        "m map<string,int>, xs array<int>, n long",
+    )
+    assert df.columns == ["m", "xs", "n"]
+    row = df.collect()[0]
+    assert row.n == 3 and row.xs == [1, 2] and row.m == {"k": 1}
+    # and it must be a LocalRelation (Arrow path), not a pickled RDD
+    assert "LogicalRDD" not in df._jdf.queryExecution().analyzed().toString()

@@ -8,6 +8,10 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from db_cdc_poc_spark.partitioning import (
+    metadata_row_count,
+    scaled_spread_target,
+)
 from db_cdc_poc_spark.sources.testdata import load_table
 
 from .conftest import SF_DIR
@@ -173,3 +177,32 @@ def test_aqe_splits_skewed_join_partitions(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_metadata_row_count_matches_count(spark):
+    docs = load_table(spark, SF_DIR, "documents")
+    n = metadata_row_count(docs)
+    assert n is not None
+    assert n == docs.count()
+
+
+def test_metadata_row_count_refuses_cardinality_changes(spark):
+    docs = load_table(spark, SF_DIR, "documents")
+    assert metadata_row_count(docs.filter(F.col("doc_id") > 3)) is None
+    assert metadata_row_count(docs.limit(2)) is None
+    assert metadata_row_count(docs.groupBy("lang").count()) is None
+    # projections/repartitions preserve rows and must still answer
+    assert metadata_row_count(
+        docs.select("doc_id").repartition(4)
+    ) == docs.count()
+
+
+def test_scaled_spread_target_bounds(spark):
+    par = spark.sparkContext.defaultParallelism
+    assert scaled_spread_target(spark, None) == par
+    assert scaled_spread_target(spark, 1, 128 << 10) == 1
+    assert scaled_spread_target(spark, (128 << 10) * par * 10, 128 << 10) == par
+    assert (
+        scaled_spread_target(spark, (128 << 10) * 3, 128 << 10)
+        == min(3, par)
+    )
