@@ -30,24 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from db_cdc_poc_spark.operators.dedup import shingle_rows
-
-
-def eval_ngrams(
-    eval_df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 8
-) -> DataFrame:
-    """The distinct n-gram set of the eval corpus: one `shingle` column.
-
-    Distinct FIRST (on the small side) so the broadcast payload and the
-    join fan-out are both minimal — a shingle repeated across eval docs
-    must not multiply train-side hit rows.
-    """
-    return (
-        shingle_rows(eval_df, id_col=id_col, text_col=text_col, n=n)
-        .select("shingle")
-        .distinct()
-    )
-
 
 def contaminated_docs(
     train_df: DataFrame,

@@ -1,5 +1,5 @@
 """Join strategies beyond the built-ins: as-of join, skew salting,
-bucketed co-located joins.
+range joins.
 
 The reference's only non-equi predicate is the gold query's range
 residual (J2, 04_Current_Inventory.sql:30-33); these are the engine
@@ -104,35 +104,6 @@ def salted_join(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<bigint>"))
     )
     return lsalt.join(rsalt, [*on, "__salt"], how).drop("__salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    keys: str | Sequence[str],
-    buckets: int = 32,
-    sort_by: str | Sequence[str] | None = None,
-) -> None:
-    """Persist as a bucketed managed table (hash-partitioned into
-    ``buckets`` files per partition by ``keys``). Two tables bucketed
-    identically join WITHOUT a shuffle — the physical plan shows no
-    Exchange on either side. This is the 100 TB answer for repeated
-    large-large joins on a stable key (fact-fact co-location).
-    """
-    import shutil
-
-    spark = df.sparkSession
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # a crashed prior write can leave the managed location behind with
-    # no catalog entry; saveAsTable refuses to reuse it
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    shutil.rmtree(f"{warehouse}/{table.lower()}", ignore_errors=True)
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(buckets, *keys)
-    if sort_by is not None:
-        sort_by = [sort_by] if isinstance(sort_by, str) else list(sort_by)
-        writer = writer.sortBy(*sort_by)
-    writer.saveAsTable(table)
 
 
 def range_join(

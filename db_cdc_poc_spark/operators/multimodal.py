@@ -247,142 +247,3 @@ def frame_sample_plan(
         )
     )
 
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Metadata-only aggregate — never touches the binary column, so
-    column pruning keeps the blob out of the scan entirely."""
-    return (
-        media.groupBy(F.col("meta.media_type").alias("media_type"))
-        .agg(
-            F.count("*").alias("n"),
-            F.avg("meta.duration_ms").alias("avg_duration_ms"),
-        )
-    )
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("content", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
-
-def _fake_resize(content: bytes, w: int, h: int) -> bytes:
-    """Deterministic stand-in for a decoded-resize-reencode kernel:
-    sha256-keyed bytes sized proportionally to the target pixel count
-    (3 bytes/pixel, capped) — stable across runs, lets plumbing tests
-    assert sizes and schemas without a codec."""
-    digest = hashlib.sha256(content).digest()
-    n = min(3 * w * h, 1 << 16)
-    reps = (n + len(digest) - 1) // len(digest)
-    return (digest * reps)[:n]
-
-
-def resize_images(
-    media: DataFrame,
-    width: int = 224,
-    height: int = 224,
-    fake_decode: bool = True,
-) -> DataFrame:
-    """The decode → resize → re-encode stage of an image training
-    pipeline, as an Arrow-batched ``mapInPandas``: binary in, binary
-    out, bytes cross the boundary once per batch. Only image rows are
-    processed (filter BEFORE the Python stage, so video/audio blobs
-    never reach the worker). With ``fake_decode=False`` the kernel is
-    real Pillow decode→resize→PNG re-encode when Pillow is importable;
-    otherwise it raises ``DecodeUnavailable``.
-
-    Output: ``(media_id, content, width, height, n_bytes)``.
-    """
-
-    if not fake_decode and _image_codec() is None:
-        # eager, same rationale as extract_features: no silent success
-        # on image-free input, no opaque executor-wrapped error
-        raise DecodeUnavailable(
-            "Pillow not importable; pass fake_decode=True"
-        )
-
-    def _real_resize(b: bytes) -> bytes:
-        import io  # noqa: PLC0415
-
-        Image = _image_codec()
-        with Image.open(io.BytesIO(b)) as im:
-            buf = io.BytesIO()
-            im.convert("RGB").resize((width, height)).save(buf, format="PNG")
-            return buf.getvalue()
-
-    kernel = (
-        (lambda b: _fake_resize(b, width, height)) if fake_decode else _real_resize
-    )
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf["content"].map(lambda b: kernel(bytes(b)))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": out,
-                    "width": width,
-                    "height": height,
-                    "n_bytes": out.map(len).astype("int64"),
-                }
-            )
-
-    return (
-        media.filter(F.col("meta.media_type") == "image")
-        .select("media_id", "content")
-        .mapInPandas(_resize, schema=RESIZED_SCHEMA)
-    )
-
-
-def audio_chunk_plan(
-    media: DataFrame, chunk_ms: int = 30_000
-) -> DataFrame:
-    """Expand each audio row into fixed-duration chunk boundaries
-    (media_id, chunk_no, start_ms, end_ms, n_samples) — the audio
-    sibling of ``frame_sample_plan``: pure Column arithmetic over the
-    metadata (sequence + explode), the blob is never read. Chunk decode
-    happens downstream in an ``extract_features``-style stage that
-    slices by byte range.
-
-    Rows with NULL or non-positive ``meta.duration_ms`` are excluded
-    (no boundaries can be planned). Rows with an unknown
-    ``meta.sample_rate`` are KEPT — time boundaries are still valid and
-    decodable — but their ``n_samples`` is NULL rather than fabricated.
-    """
-    n_chunks = F.greatest(
-        F.ceil(F.col("meta.duration_ms").cast("double") / chunk_ms).cast("long"),
-        F.lit(1),
-    )
-    out = (
-        # unknown or corrupt durations are excluded, not fabricated:
-        # least() skips NULLs (a NULL duration would invent a
-        # full-length chunk) and a non-positive duration would emit
-        # degenerate or inverted byte ranges
-        media.filter(
-            (F.col("meta.media_type") == "audio")
-            & (F.col("meta.duration_ms") > 0)
-        )
-        .select(
-            "media_id",
-            F.col("meta.duration_ms").alias("__dur"),
-            F.col("meta.sample_rate").alias("__sr"),
-            F.posexplode(F.sequence(F.lit(1), n_chunks)).alias("chunk_no", "__x"),
-        )
-    )
-    start = F.col("chunk_no").cast("long") * chunk_ms
-    end = F.least(start + chunk_ms, F.col("__dur"))
-    return out.select(
-        "media_id",
-        "chunk_no",
-        start.alias("start_ms"),
-        end.alias("end_ms"),
-        F.when(
-            F.col("__sr") > 0,
-            ((end - start) * F.col("__sr").cast("long") / F.lit(1000)).cast("long"),
-        ).alias("n_samples"),
-    )

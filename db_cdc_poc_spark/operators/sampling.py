@@ -51,19 +51,6 @@ def hash_bucket(
     return (h.bitwiseAND(F.lit(_MASK63)) % F.lit(buckets)).cast("long")
 
 
-def hash_sample(
-    df: DataFrame,
-    id_col: str,
-    fraction: float,
-    salt: str = "",
-    buckets: int = DEFAULT_BUCKETS,
-) -> DataFrame:
-    """Keep a deterministic ~``fraction`` of rows (by id hash)."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1]: {fraction}")
-    return df.filter(hash_bucket(id_col, salt, buckets) < int(fraction * buckets))
-
-
 def stratified_sample(
     df: DataFrame,
     id_col: str,

@@ -164,20 +164,6 @@ def doc_fingerprint(text: Column | str) -> Column:
     return F.md5(normalized)
 
 
-def rolling_hashes(text: Column | str, window: int = 5) -> Column:
-    """array<bigint> rolling window hashes over whitespace tokens
-    (xxhash64 of each ``window``-gram) — the winnowing/fingerprint basis
-    used for plagiarism-style containment detection. Map-only.
-    """
-    toks = whitespace_tokens(text)
-    count = F.greatest(F.size(toks) - F.lit(window - 1), F.lit(0))
-    idx = F.sequence(F.lit(0), count - F.lit(1))
-    return F.when(
-        count > 0,
-        F.transform(idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i + 1, window)))),
-    ).otherwise(F.array().cast("array<bigint>"))
-
-
 def tfidf_terms(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -812,55 +798,6 @@ def bigram_lm_scores(
             ).alias("avg_logprob"),
         )
     )
-
-
-def compression_ratios(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    level: int = 6,
-) -> DataFrame:
-    """zlib compression ratio per document — the classic cheap quality
-    signal (Gopher's repetition rules approximate it set-side; the
-    ratio itself needs a real compressor): boilerplate/repetitive text
-    compresses far below ~0.4, random bytes sit near 1.0.
-
-    This is the repo's canonical "genuinely needs Python" operator
-    shape: an Arrow-batched ``mapInPandas`` (one Python invocation per
-    batch, not per row) whose output is engine-deterministic for a
-    fixed zlib level — but NOT replayable in SQL, so it ships with
-    parity tests instead of a DuckDB oracle entry. Prefer the
-    set-based q26/q53/q99/q108 signals when they suffice.
-
-    Output: ``(id, n_bytes, n_compressed, ratio_ppm)`` — ratio as an
-    exact integer ppm (floor of 1e6·compressed/raw); empty docs get
-    ratio_ppm = 1_000_000.
-    """
-    import zlib
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    out_schema = f"id {dict(df.dtypes)[id_col]}, n_bytes long, n_compressed long, ratio_ppm long"
-
-    def _compress(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            raw = pdf[text_col].fillna("").map(lambda s: s.encode("utf-8"))
-            nb = raw.map(len)
-            nc = raw.map(lambda b: len(zlib.compress(b, level)))
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "n_bytes": nb.astype("int64"),
-                    "n_compressed": nc.astype("int64"),
-                    "ratio_ppm": [
-                        (1_000_000 * c) // b if b else 1_000_000
-                        for b, c in zip(nb, nc)
-                    ],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(_compress, out_schema)
 
 
 # --------------------------------------------------------------------------

@@ -10,6 +10,11 @@ the stage counts in the report. At 100 TB each arrow is a distributed
 pass: the quality filter is map-only, LSH shuffles by band bucket,
 clustering shuffles pair-graph labels (tiny), and survivor selection
 is one max_by aggregate per cluster.
+
+This is the one corpus pipeline (q145 runs it against its oracle).
+Repetition filtering, PII redaction, eval decontamination and sequence
+packing are operators in ``operators/text.py`` and
+``operators/decontam.py`` that a caller composes around it.
 """
 
 from __future__ import annotations
@@ -96,134 +101,3 @@ def clean_corpus(
         kept.unpersist()
     return clean, report
 
-
-@dataclass(frozen=True)
-class TrainingCorpusReport:
-    n_input: int
-    n_after_quality: int
-    n_after_repetition: int
-    n_after_decontam: int
-    n_after_dedup: int
-    n_sequences: int
-
-
-def prepare_training_corpus(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_quality: float = 0.4,
-    max_dup_2gram_frac: float = 0.5,
-    decontam_n: int = 8,
-    jaccard_threshold: float = 0.5,
-    seq_budget: int = 256,
-    pack_groups: int = 8,
-    max_band_bucket: int | None = 1000,
-) -> tuple[DataFrame, TrainingCorpusReport]:
-    """The full pre-training data pipeline, end to end:
-
-        documents ─► quality filter (map-only)
-                  ─► repetition filter (Gopher-style; explode+agg)
-                  ─► PII redaction (map-only regexp chain)
-                  ─► eval-set decontamination (broadcast n-gram semi)
-                  ─► MinHash-LSH fuzzy dedup (best-quality survivor)
-                  ─► sequence packing (per-group running totals)
-
-    Returns (packed, report): ``packed`` has the surviving documents
-    with redacted text plus (grp, seq_id, start_tok) packing
-    coordinates; the report counts every stage's survivors so the
-    pipeline accounts for what it dropped (the no-silent-caps rule).
-
-    Scale shape per stage: quality/redaction pipeline with the scan;
-    repetition adds one explode+aggregate pass; decontamination
-    broadcasts the (small) eval n-gram set — the corpus is never
-    shuffled for it; LSH shuffles (id, band) pairs with the band-bucket
-    skew cap ON; packing is one shuffle by pack group. Nothing
-    collects documents to the driver.
-    """
-    from db_cdc_poc_spark.operators.decontam import contaminated_docs
-    from db_cdc_poc_spark.operators.text import (
-        pack_sequences,
-        redact_pii,
-        repetition_features,
-    )
-
-    n_input = docs.count()
-
-    feats = quality_features(docs, id_col=id_col, text_col=text_col).select(
-        F.col("id").alias(id_col), "quality_score"
-    )
-    quality_kept = docs.join(feats, id_col).filter(
-        F.col("quality_score") >= min_quality
-    )
-    n_after_quality = quality_kept.count()
-
-    rep = repetition_features(quality_kept, id_col=id_col, text_col=text_col).select(
-        F.col("id").alias(id_col), "dup_2gram_frac"
-    )
-    rep_kept = (
-        quality_kept.join(rep, id_col)
-        .filter(F.col("dup_2gram_frac") <= max_dup_2gram_frac)
-        .drop("dup_2gram_frac")
-    )
-    n_after_repetition = rep_kept.count()
-
-    redacted = rep_kept.drop(text_col).join(
-        redact_pii(rep_kept, id_col=id_col, text_col=text_col).select(
-            F.col("id").alias(id_col), F.col("clean_text").alias(text_col)
-        ),
-        id_col,
-    )
-
-    contaminated = contaminated_docs(
-        redacted, eval_docs, id_col=id_col, text_col=text_col, n=decontam_n
-    ).select(F.col("id").alias(id_col))
-    decontaminated = redacted.join(
-        F.broadcast(contaminated), id_col, "left_anti"
-    )
-    decontaminated.persist()
-    try:
-        n_after_decontam = decontaminated.count()
-
-        pairs = minhash_lsh_pairs(
-            decontaminated,
-            id_col=id_col,
-            text_col=text_col,
-            threshold=jaccard_threshold,
-            max_bucket_size=max_band_bucket,
-        )
-        deduped = dedup_fuzzy(
-            decontaminated,
-            pairs,
-            id_col=id_col,
-            keep="best_quality",
-            quality_col="quality_score",
-        )
-        packed = deduped.join(
-            pack_sequences(
-                deduped,
-                budget=seq_budget,
-                num_groups=pack_groups,
-                id_col=id_col,
-                text_col=text_col,
-            ).select(
-                F.col("id").alias(id_col), "grp", "seq_id", "start_tok"
-            ),
-            id_col,
-        )
-        n_after_dedup = deduped.count()
-        n_sequences = (
-            packed.select("grp", "seq_id").distinct().count()
-        )
-    finally:
-        decontaminated.unpersist()
-
-    report = TrainingCorpusReport(
-        n_input=n_input,
-        n_after_quality=n_after_quality,
-        n_after_repetition=n_after_repetition,
-        n_after_decontam=n_after_decontam,
-        n_after_dedup=n_after_dedup,
-        n_sequences=n_sequences,
-    )
-    return packed, report

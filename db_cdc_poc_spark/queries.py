@@ -834,12 +834,6 @@ def q25_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Text analysis over documents (LLM-pipeline extension)
 # ---------------------------------------------------------------------------
 
-_Q26_STOPWORD_SQL = """
-    CAST(len(list_filter(list_transform(toks, t -> lower(t)),
-                         t -> list_contains({words}, t))) AS DOUBLE)
-        / greatest(len(toks), 1)
-"""
-
 
 @_q(
     "q26_text_quality",

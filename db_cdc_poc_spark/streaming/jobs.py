@@ -127,50 +127,6 @@ def stream_session_counts(
     )
 
 
-def stream_session_counts_append(
-    spark: SparkSession,
-    source_path: str,
-    gap: str = "10 minutes",
-    watermark_delay: str = "1 hour",
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Watermarked ``session_window`` aggregate in APPEND mode — the
-    continuous-deployment form of ``stream_session_counts``.
-
-    The late-event drop contract (swept across gap x watermark settings
-    in test_sessionize.py): the watermark is the max event time seen in
-    PRIOR micro-batches minus ``watermark_delay``, and takes effect on
-    input filtering one trigger after the batch that advanced it
-    commits (verified empirically); an arriving row whose session
-    window ``[ts, ts + gap]`` ends at or below the effective watermark
-    is dropped (its state is gone), while any row above it merges
-    normally — so widening the watermark buys late-event reach at the
-    price of state lifetime, independent of the gap. A session
-    is published once the watermark passes its close, which means a
-    finite drain withholds the session holding the stream's max event
-    time (same tail tradeoff as ``stream_windowed_counts``).
-    """
-    from pyspark.sql import functions as F
-
-    return drain_to_memory(
-        spark,
-        source_path,
-        lambda s: s.withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col, F.session_window(F.col(ts_col), gap).alias("w"))
-        .agg(F.count("*").alias("n_events")),
-        "sess_append",
-        "append",
-        max_files_per_trigger,
-    ).select(
-        key_col,
-        F.col("w.start").alias("session_start"),
-        F.col("w.end").alias("session_end"),
-        "n_events",
-    )
-
-
 def stream_stream_join(
     spark: SparkSession,
     source_path: str,

@@ -15,6 +15,12 @@ tests with mtime-forced file ordering.
 Scale: state is ~16 bytes per ACTIVE user, partitioned by user hash in
 the state store; each micro-batch shuffles only its own rows. The
 Python work is Arrow-batched per user group — no row-at-a-time UDF.
+
+This is the one streaming form of the per-event session fold. Spark 4's
+``transformWithStateInPandas`` would run the same fold with typed named
+state; it is not carried as a second copy, since one stateful operator
+per semantics is enough (the declarative ``session_window`` aggregate
+lives in ``streaming/jobs.py``).
 """
 
 from __future__ import annotations
@@ -87,88 +93,3 @@ def stream_sessionize(
         max_files_per_trigger,
     )
 
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas form (Spark 4's arbitrary-state API)
-# ---------------------------------------------------------------------------
-
-
-class _SessionProcessor:
-    """StatefulProcessor running the SAME session fold as
-    ``_session_fold`` on Spark 4's ``transformWithStateInPandas`` —
-    the successor API to ``applyInPandasWithState``: typed named state
-    (ValueState/ListState/MapState) instead of one opaque tuple,
-    per-state TTL, timers, and RocksDB-backed stores. State here is one
-    ValueState row per active user; parity with the batch window form
-    under chronological arrival is asserted in tests alongside the
-    legacy operator.
-
-    Built lazily (class defined module-level, base imported at call
-    time) so importing this module never requires the streaming
-    processor API.
-    """
-
-    def __init__(self, gap_seconds: int) -> None:
-        self.gap_us = gap_seconds * 1_000_000
-
-    def init(self, handle) -> None:  # noqa: ANN001
-        self.state = handle.getValueState("sess", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-        (user_id,) = key
-        last_us, seq = self.state.get() if self.state.exists() else (None, 0)
-        batch = pd.concat(list(rows), ignore_index=True)
-        batch = batch.sort_values(["ts", "event_id"], kind="mergesort")
-        out = []
-        for ts_ns in batch["ts"].astype("int64"):
-            us = ts_ns // 1_000
-            if last_us is None or us - last_us > self.gap_us:
-                seq += 1
-            last_us = us
-            out.append(seq)
-        self.state.update((int(last_us), int(seq)))
-        yield pd.DataFrame(
-            {
-                "user_id": user_id,
-                "event_id": batch["event_id"].to_numpy(),
-                "ts": batch["ts"].to_numpy(),
-                "session_seq": pd.array(out, dtype="int32"),
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def stream_sessionize_tws(
-    spark: SparkSession,
-    source_path: str,
-    gap_seconds: int = 1800,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """``transformWithStateInPandas`` sessionization — same contract as
-    ``stream_sessionize`` on the modern API.
-
-    Environment note: the tws state protocol speaks protobuf between
-    the JVM and the Python driver worker; containers without
-    ``google.protobuf`` can't run it (the parity test importorskips),
-    but the operator is plain public API and runs anywhere real.
-    """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    proc_cls = type("SessionProcessor", (_SessionProcessor, StatefulProcessor), {})
-    return drain_to_memory(
-        spark,
-        source_path,
-        lambda s: s.select("user_id", "event_id", "ts")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=proc_cls(gap_seconds),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        ),
-        "sess_tws",
-        "update",
-        max_files_per_trigger,
-    )

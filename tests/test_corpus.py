@@ -2,9 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from db_cdc_poc_spark.pipelines.corpus import clean_corpus
 from db_cdc_poc_spark.sources.testdata import load_table
 
@@ -52,36 +49,3 @@ def test_clean_corpus_keeps_best_quality_copy(spark):
     assert ids == {2, 3}
     assert report.deduped_out == 1
 
-
-def test_prepare_training_corpus_end_to_end(spark):
-    """Full pipeline on testdata: every stage monotonically shrinks the
-    corpus, planted near-dups are gone, eval-contaminated docs are
-    gone, PII is scrubbed, every survivor has packing coordinates."""
-    from pyspark.sql import functions as F
-
-    from db_cdc_poc_spark.operators.decontam import contaminated_docs
-    from db_cdc_poc_spark.pipelines.corpus import prepare_training_corpus
-
-    docs = load_table(spark, SF_DIR, "documents").withColumn(
-        "text", F.concat(F.col("text"), F.lit(" reach me at someone@example.com"))
-    )
-    ev = docs.filter(F.col("doc_id") % 10 == 0)
-    train = docs.filter(F.col("doc_id") % 10 != 0)
-    packed, rep = prepare_training_corpus(train, ev)
-
-    assert rep.n_input >= rep.n_after_quality >= rep.n_after_repetition
-    assert rep.n_after_repetition >= rep.n_after_decontam >= rep.n_after_dedup
-    assert rep.n_after_dedup == packed.count() > 0
-    assert rep.n_sequences > 0
-
-    # PII scrubbed everywhere
-    assert packed.filter(F.col("text").contains("@example.com")).count() == 0
-    # no residual eval contamination among survivors (text was redacted,
-    # but the planted email suffix is shared with eval docs too — use
-    # the pipeline's own n-gram rule against the ORIGINAL eval slice)
-    residual = contaminated_docs(packed, ev, n=8)
-    assert residual.join(
-        packed.select("doc_id"), residual["id"] == F.col("doc_id")
-    ).count() == 0
-    # packing coordinates are consistent: start_tok < budget
-    assert packed.filter(F.col("start_tok") >= 256).count() == 0

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from db_cdc_poc_spark.operators.decontam import contaminated_docs, eval_ngrams
+from db_cdc_poc_spark.operators.decontam import contaminated_docs
 
 EVAL = [
     # 11 tokens -> 4 distinct 8-grams
@@ -42,14 +42,6 @@ def test_planted_leak_flagged_with_exact_counts(spark):
     assert row.n_shingles == 6
     assert row.n_hit == 2
     assert abs(row.contamination - round(2 / 6, 6)) < 1e-9
-
-
-def test_eval_ngrams_distinct_and_sized(spark):
-    _, ev = _dfs(spark)
-    grams = eval_ngrams(ev, n=8).collect()
-    # 11 tokens -> 4 shingles; 8 tokens -> 1 shingle; all distinct
-    assert len(grams) == 5
-    assert len({g.shingle for g in grams}) == 5
 
 
 def test_eval_side_is_broadcast_when_forced(spark):

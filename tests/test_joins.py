@@ -1,11 +1,11 @@
-"""Join strategy extensions: as-of join, salted join, bucketed joins."""
+"""Join strategy extensions: as-of join, salted join, range join."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from db_cdc_poc_spark.operators.joins import asof_join, salted_join, write_bucketed
+from db_cdc_poc_spark.operators.joins import asof_join, salted_join
 
 
 def test_asof_join_backward_inclusive(spark):
@@ -73,27 +73,6 @@ def test_salted_join_left_outer(spark):
     small = spark.createDataFrame([(1, "x")], "k long, v string")
     rows = {r.payload: r.v for r in salted_join(big, small, "k", how="left").collect()}
     assert rows == {"a": "x", "b": None}
-
-
-def test_bucketed_join_has_no_shuffle(spark):
-    left = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS a")
-    right = spark.range(0, 1000).selectExpr("id AS k", "id * 3 AS b")
-    write_bucketed(left, "bkt_left", "k", buckets=8, sort_by="k")
-    write_bucketed(right, "bkt_right", "k", buckets=8, sort_by="k")
-    # force the SMJ path: tiny test tables would otherwise broadcast,
-    # which hides the co-location property under test
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bkt_left").join(spark.table("bkt_right"), "k")
-        assert joined.count() == 1000
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, (
-            "bucketed co-located join must not shuffle"
-        )
-        assert "SortMergeJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_range_join_matches_naive_nonequi(spark):

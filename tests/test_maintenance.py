@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import functions as F
 
 from db_cdc_poc_spark.operators.maintenance import (
@@ -221,3 +223,46 @@ def test_execute_compaction_rejects_partitioned_plan(spark, tmp_path):
     plan = compaction_plan(files, target_bytes=100, partition_cols=["part"])
     with pytest.raises(ValueError, match="partition"):
         execute_compaction(spark, str(tmp_path), plan)
+
+
+def test_recover_compaction_rolls_forward_and_back(spark, tmp_path):
+    from db_cdc_poc_spark.operators.maintenance import recover_compaction
+
+    path = tmp_path / "tbl"
+    spark.range(100).selectExpr("id", "id % 7 AS v").repartition(4).write.parquet(
+        str(path)
+    )
+    files = sorted(p.name for p in path.glob("*.parquet"))
+    assert len(files) == 4
+    total = spark.read.parquet(str(path)).agg(F.sum("v")).collect()[0][0]
+
+    # FORWARD case: compacted file written, members NOT yet unlinked
+    # (crash between move and unlinks) -> permanent duplicates today
+    members = files[:2]
+    new_name = "compact-0-deadbeef.parquet"
+    spark.read.parquet(*[str(path / m) for m in members]).coalesce(1).write.parquet(
+        str(tmp_path / "stage")
+    )
+    [part] = list((tmp_path / "stage").glob("part-*.parquet"))
+    part.rename(path / new_name)
+    (path / ".compact-journal-0-aa.json").write_text(
+        json.dumps({"members": members, "new_file": new_name})
+    )
+    # duplicates are now visible — the defect recover must repair
+    assert spark.read.parquet(str(path)).count() > 100
+
+    # BACK case: journal written, crash BEFORE the move (no new file)
+    (path / ".compact-journal-1-bb.json").write_text(
+        json.dumps({"members": files[2:], "new_file": "compact-1-never.parquet"})
+    )
+
+    res = recover_compaction(str(path))
+    assert res == {"rolled_forward": 1, "rolled_back": 1,
+                   "members_removed": 2}
+    # table is exactly the original data again; no journals remain
+    assert spark.read.parquet(str(path)).count() == 100
+    assert spark.read.parquet(str(path)).agg(F.sum("v")).collect()[0][0] == total
+    assert list(path.glob(".compact-journal-*.json")) == []
+    # idempotent
+    assert recover_compaction(str(path)) == {
+        "rolled_forward": 0, "rolled_back": 0, "members_removed": 0}

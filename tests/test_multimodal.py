@@ -6,7 +6,6 @@ from __future__ import annotations
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from db_cdc_poc_spark.operators import multimodal as mm
 
@@ -55,48 +54,6 @@ def test_frame_sample_plan(spark, media):
     assert sorted(r.frame_ts_ms for r in rows) == [0, 1000, 2000]
 
 
-def test_media_stats_prunes_binary_column(spark, media):
-    # pruning is visible on a file scan (ReadSchema), not a local
-    # relation — stage the table as parquet first
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="media_") + "/media"
-    media.write.parquet(path)
-    stats = mm.media_stats(spark.read.parquet(path))
-    assert {r.media_type: r.n for r in stats.collect()} == {
-        "image": 1, "audio": 1, "video": 1,
-    }
-    plan = stats._jdf.queryExecution().executedPlan().toString()
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert read_schema and all(
-        "content" not in ln for ln in read_schema
-    ), "binary column must be pruned from metadata scans"
-
-
-def test_resize_images_only_images_and_sized_output(spark, media):
-    out = {r.media_id: r for r in mm.resize_images(media, 8, 8).collect()}
-    # only the image row survives the pre-Python filter
-    assert set(out) == {1}
-    r = out[1]
-    assert (r.width, r.height) == (8, 8)
-    assert r.n_bytes == 3 * 8 * 8
-    assert len(bytes(r.content)) == r.n_bytes
-    # deterministic kernel
-    again = {r.media_id: bytes(r.content) for r in mm.resize_images(media, 8, 8).collect()}
-    assert again[1] == bytes(r.content)
-
-
-def test_resize_real_decode_raises(spark, media):
-    if mm._image_codec() is not None:
-        pytest.skip("Pillow is importable: real decode active")
-    with pytest.raises(mm.DecodeUnavailable):
-        mm.resize_images(media, 8, 8, fake_decode=False)
-    # eager even when the input has no image rows at all
-    no_images = media.filter(F.col("meta.media_type") == "audio")
-    with pytest.raises(mm.DecodeUnavailable):
-        mm.resize_images(no_images, 8, 8, fake_decode=False)
-
-
 def _png_bytes(w: int, h: int) -> bytes:
     """A tiny real PNG via Pillow (caller importorskips)."""
     import io
@@ -107,24 +64,6 @@ def _png_bytes(w: int, h: int) -> bytes:
     buf = io.BytesIO()
     im.save(buf, format="PNG")
     return buf.getvalue()
-
-
-def test_resize_images_real_pil_roundtrip(spark):
-    # runs wherever Pillow exists (skipped in codec-less containers);
-    # the fake-kernel tests above pin the plumbing either way
-    pytest.importorskip("PIL")
-    png = _png_bytes(32, 20)
-    df = spark.createDataFrame(
-        [(1, png, ("image", "png", 32, 20, None, None))], mm.MEDIA_SCHEMA
-    )
-    [r] = mm.resize_images(df, 8, 8, fake_decode=False).collect()
-    from io import BytesIO
-
-    from PIL import Image
-
-    with Image.open(BytesIO(bytes(r.content))) as im:
-        assert im.size == (8, 8)
-    assert (r.width, r.height) == (8, 8)
 
 
 def test_extract_features_real_pil(spark):
@@ -141,76 +80,6 @@ def test_extract_features_real_pil(spark):
     assert len(out[1]) == 8 and all(0.0 <= x <= 1.0 for x in out[1])
     assert out[2] is None  # failed decode -> NULL, not a job abort
     assert out[3] is None  # undecodable type -> NULL
-
-
-def test_audio_chunk_plan(spark, media):
-    rows = mm.audio_chunk_plan(media, chunk_ms=2000).collect()
-    # only the audio row (5000 ms) -> chunks [0,2000),[2000,4000),[4000,5000)
-    assert {r.media_id for r in rows} == {2}
-    chunks = sorted((r.chunk_no, r.start_ms, r.end_ms, r.n_samples) for r in rows)
-    assert chunks == [
-        (0, 0, 2000, 32000),
-        (1, 2000, 4000, 32000),
-        (2, 4000, 5000, 16000),
-    ]
-
-
-def test_audio_chunk_plan_never_reads_blob(spark, media):
-    # pruning is visible on a file scan (ReadSchema), not a local relation
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="media_chunk_") + "/media"
-    media.write.parquet(path)
-    plan = (
-        mm.audio_chunk_plan(spark.read.parquet(path))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert read_schema and all("content" not in ln for ln in read_schema)
-
-
-def test_audio_chunk_plan_excludes_null_and_nonpositive_durations(spark):
-    rows = [
-        (10, b"x", ("audio", "wav", None, None, None, 16000)),    # NULL dur
-        (11, b"y", ("audio", "wav", None, None, -100, 16000)),    # corrupt
-        (12, b"z", ("audio", "wav", None, None, 0, 16000)),       # zero
-        (13, b"w", ("audio", "wav", None, None, 1000, 16000)),    # good
-    ]
-    df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    out = mm.audio_chunk_plan(df, chunk_ms=2000).collect()
-    assert {r.media_id for r in out} == {13}
-    [r] = out
-    assert (r.start_ms, r.end_ms, r.n_samples) == (0, 1000, 16000)
-
-
-def test_audio_chunk_plan_null_sample_rate_yields_null_n_samples(spark):
-    # unknown/corrupt sample rate: time boundaries are still planned
-    # (they are decodable downstream) but n_samples must be NULL, never
-    # fabricated from a NULL or non-positive rate
-    rows = [
-        (20, b"a", ("audio", "wav", None, None, 3000, None)),   # NULL sr
-        (21, b"b", ("audio", "wav", None, None, 3000, 0)),      # zero sr
-        (22, b"c", ("audio", "wav", None, None, 3000, -8000)),  # negative sr
-        (23, b"d", ("audio", "wav", None, None, 3000, 8000)),   # good
-    ]
-    df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    out = mm.audio_chunk_plan(df, chunk_ms=2000).collect()
-    assert {r.media_id for r in out} == {20, 21, 22, 23}
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r.media_id, []).append(r)
-    for mid in (20, 21, 22):
-        assert all(r.n_samples is None for r in by_id[mid])
-        assert sorted((r.start_ms, r.end_ms) for r in by_id[mid]) == [
-            (0, 2000),
-            (2000, 3000),
-        ]
-    assert sorted((r.start_ms, r.end_ms, r.n_samples) for r in by_id[23]) == [
-        (0, 2000, 16000),
-        (2000, 3000, 8000),
-    ]
 
 
 def _wav_bytes(samples, rate=16000, width=2):

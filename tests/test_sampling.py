@@ -10,13 +10,8 @@ from pyspark.sql import functions as F
 from db_cdc_poc_spark.operators.sampling import (
     _MASK63,
     hash_bucket,
-    hash_sample,
     split_assign,
 )
-
-
-def _ids(df):
-    return {r.id for r in df.select(F.col("doc_id").alias("id")).collect()}
 
 
 def _docs(spark, n=2000):
@@ -36,19 +31,6 @@ def test_hash_bucket_matches_hashlib(spark):
         assert got[i] == (h & _MASK63) % 1_000_000, i
 
 
-def test_hash_sample_deterministic_and_proportional(spark):
-    df = _docs(spark)
-    a = _ids(hash_sample(df, "doc_id", 0.3, salt="x"))
-    b = _ids(hash_sample(df, "doc_id", 0.3, salt="x"))
-    assert a == b  # repeatable
-    assert abs(len(a) / 2000 - 0.3) < 0.05
-    c = _ids(hash_sample(df, "doc_id", 0.3, salt="y"))
-    assert a != c  # independent draw under a different salt
-    # nested: a smaller fraction with the same salt is a subset
-    d = _ids(hash_sample(df, "doc_id", 0.1, salt="x"))
-    assert d <= a
-
-
 def test_split_assign_disjoint_exhaustive_proportional(spark):
     df = _docs(spark)
     out = split_assign(df, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
@@ -57,15 +39,6 @@ def test_split_assign_disjoint_exhaustive_proportional(spark):
     assert sum(counts.values()) == 2000  # exhaustive, disjoint by construction
     assert abs(counts["train"] / 2000 - 0.8) < 0.05
     assert abs(counts["val"] / 2000 - 0.1) < 0.03
-
-
-def test_hash_sample_is_map_only(spark):
-    df = _docs(spark)
-    plan = (
-        hash_sample(df, "doc_id", 0.5)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan, "sampling must not shuffle"
 
 
 def test_stratified_sample_rates_and_nesting(spark):

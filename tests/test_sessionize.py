@@ -5,18 +5,13 @@ user's events arrive across micro-batches in chronological order."""
 from __future__ import annotations
 
 import os
-
-import pytest
 import tempfile
 
 from pyspark.sql import functions as F
 
 from db_cdc_poc_spark.operators.sessionize import session_summary, sessionize
 from db_cdc_poc_spark.sources.testdata import load_table
-from db_cdc_poc_spark.streaming.sessionize import (
-    stream_sessionize,
-    stream_sessionize_tws,
-)
+from db_cdc_poc_spark.streaming.sessionize import stream_sessionize
 
 from .conftest import SF_DIR
 
@@ -92,14 +87,6 @@ def test_stream_sessionize_matches_batch_across_chronological_batches(spark):
     _assert_stream_matches_batch(spark, stream_sessionize)
 
 
-def test_stream_sessionize_tws_matches_batch_across_chronological_batches(spark):
-    # same fold, same parity, on Spark 4's transformWithStateInPandas.
-    # The tws state protocol needs google.protobuf, which this
-    # environment lacks (no pip) — skip there, run anywhere real.
-    pytest.importorskip("google.protobuf")
-    _assert_stream_matches_batch(spark, stream_sessionize_tws)
-
-
 def test_sessionize_invariants_property(spark):
     # randomized invariant check: per user, session numbers start at 1
     # and are contiguous; consecutive events in one session are within
@@ -136,82 +123,3 @@ def test_sessionize_invariants_property(spark):
             else:
                 assert gap > 1800, (user, gap)
 
-
-# -- session-window watermark sweep: the late-event drop contract -----------
-
-
-def _stage_batches(spark, batches):
-    """Write each batch as one parquet file with ascending mtimes so a
-    maxFilesPerTrigger=1 file stream drains them in order."""
-    base = tempfile.mkdtemp(prefix="sess_wm_")
-    root = f"{base}/events"
-    os.makedirs(root)
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(
-            rows, "user_id long, ts_s string"
-        ).select("user_id", F.to_timestamp("ts_s").alias("ts"))
-        staging = f"{base}/staging{i}"
-        df.coalesce(1).write.parquet(staging)
-        [f] = [x for x in os.listdir(staging) if x.endswith(".parquet")]
-        dst = f"{root}/{i:02d}.parquet"
-        os.rename(f"{staging}/{f}", dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    return root
-
-
-@pytest.mark.parametrize("gap_min,wm_min", [(5, 10), (5, 120), (30, 10), (30, 120)])
-def test_session_window_watermark_sweep_documents_late_drop(spark, gap_min, wm_min):
-    """Sweep gap x watermark over the SAME shaped stream and assert the
-    late-event drop contract of the watermarked append-mode
-    session_window (streaming/jobs.py:stream_session_counts_append):
-
-    - the watermark sits at (max prior event time − watermark delay),
-      INDEPENDENT of the gap, and takes effect on input filtering one
-      trigger AFTER the batch whose events advanced it commits (hence
-      the filler batch: empirically, a late row arriving in the very
-      next trigger is still accepted);
-    - once effective, a row whose session window ends below the
-      watermark is dropped (user 3 emits no session, whatever the gap);
-    - a row above the watermark is accepted (user 2's session appears,
-      however late it is in wall order);
-    - a far-future final row closes and flushes every surviving
-      session, except its own (the finite-drain tail, withheld in
-      append mode).
-    """
-    from datetime import datetime, timedelta
-
-    from db_cdc_poc_spark.streaming.jobs import stream_session_counts_append
-
-    t_max1 = datetime(2024, 1, 1, 12, 0, 0)  # batch-1 clock pusher
-    wm_time = t_max1 - timedelta(minutes=wm_min)
-    fmt = "%Y-%m-%d %H:%M:%S"
-    # clearly above / clearly below the watermark: 10-minute margins
-    # keep the assertion away from the boundary equality cases
-    t_accept = wm_time + timedelta(minutes=gap_min + 10)
-    t_drop = wm_time - timedelta(minutes=gap_min + 10)
-    batches = [
-        [(1, "2024-01-01 10:00:00"), (1, "2024-01-01 10:02:00"),
-         (9, t_max1.strftime(fmt))],
-        [(8, "2024-01-01 11:59:00")],  # filler: commits the watermark
-        [(2, t_accept.strftime(fmt)), (3, t_drop.strftime(fmt))],
-        [(9, "2024-02-01 00:00:00")],  # closes everything else
-    ]
-    root = _stage_batches(spark, batches)
-    got = {
-        (r.user_id, r.session_start.strftime(fmt)): r.n_events
-        for r in stream_session_counts_append(
-            spark, root,
-            gap=f"{gap_min} minutes",
-            watermark_delay=f"{wm_min} minutes",
-            max_files_per_trigger=1,
-        ).collect()
-    }
-    want = {
-        (1, "2024-01-01 10:00:00"): 2,              # both within any swept gap
-        (9, t_max1.strftime(fmt)): 1,               # batch-1 pusher
-        (8, "2024-01-01 11:59:00"): 1,              # filler
-        (2, t_accept.strftime(fmt)): 1,             # late but above watermark
-        # user 3: dropped (session end below watermark) — absent
-        # user 9 @ 2024-02-01: the finite-drain tail — withheld
-    }
-    assert got == want

@@ -78,17 +78,6 @@ def test_doc_fingerprint_normalizes_whitespace_and_case(spark):
     assert fps[0] == hashlib.md5(b"hello world").hexdigest()
 
 
-def test_rolling_hashes(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c d e f"), (2, "a b c"), (3, "a b")], "doc_id long, text string"
-    )
-    out = {r.doc_id: r.h for r in df.select(
-        "doc_id", tx.rolling_hashes("text", window=5).alias("h")).collect()}
-    assert len(out[1]) == 2  # 6 tokens, window 5 -> 2 windows
-    assert len(out[2]) == 0  # shorter than window
-    assert len(out[3]) == 0
-
-
 def test_tfidf_terms_known_values(spark):
     df = spark.createDataFrame(
         [(1, "a a b"), (2, "a c")], "doc_id long, text string"
@@ -359,36 +348,6 @@ def test_bigram_lm_scores_match_python_reference(spark):
     assert got[2].avg_logprob < 0.0
 
 
-def test_compression_ratios_rank_quality(spark):
-    import zlib
-
-    from db_cdc_poc_spark.operators.text import compression_ratios
-
-    import hashlib as _hl
-
-    texts = {
-        1: "spam spam spam " * 200,          # highly repetitive
-        2: "the quick brown fox jumps over the lazy dog. " * 50,
-        3: "".join(                          # hash chain: incompressible
-            _hl.sha256(bytes([i])).hexdigest() for i in range(47)
-        ),
-        4: "",
-    }
-    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    got = {r.id: r for r in compression_ratios(df).collect()}
-    # exact python parity (same zlib, same level)
-    for i, t in texts.items():
-        b = t.encode()
-        assert got[i].n_bytes == len(b)
-        if b:
-            c = len(zlib.compress(b, 6))
-            assert got[i].n_compressed == c
-            assert got[i].ratio_ppm == 1_000_000 * c // len(b)
-    # repetitive text compresses far below the noisy text
-    assert got[1].ratio_ppm < got[2].ratio_ppm < got[3].ratio_ppm
-    assert got[4].ratio_ppm == 1_000_000
-
-
 def test_char_entropy_empty_doc_emits_no_row(spark):
     from db_cdc_poc_spark.operators.text import char_entropy_stats
 
@@ -459,3 +418,18 @@ def test_redact_pii_by_kind_counts_and_replaces(spark):
     assert (out[4].n_email, out[4].n_ipv4, out[4].n_phone) == (0, 0, 0)
     assert out[4].clean_text == out[4].text
     assert (out[5].n_email, out[5].n_ipv4, out[5].n_phone) == (1, 1, 1)
+
+
+def test_pack_examples_rejects_duplicate_and_negative_ids(spark):
+    from db_cdc_poc_spark.operators.text import pack_examples
+
+    dup = spark.createDataFrame(
+        [(1, "a b c"), (1, "d e f"), (2, "g")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="unique non-negative"):
+        pack_examples(dup, seq_len=4).collect()
+    neg = spark.createDataFrame(
+        [(-1, "a b c"), (2, "g")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="unique non-negative"):
+        pack_examples(neg, seq_len=4).collect()

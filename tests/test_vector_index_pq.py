@@ -11,7 +11,12 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from db_cdc_poc_spark.operators.vector_index import IvfIndex
+from db_cdc_poc_spark.operators.vector_index import (
+    IvfIndex,
+    pq_adc_topk,
+    pq_codes,
+    refine_centroids,
+)
 from db_cdc_poc_spark.queries import REGISTRY, _pq_trained
 from db_cdc_poc_spark.sources.testdata import load_table
 
@@ -167,3 +172,41 @@ def test_probe_adc_refuses_stale_and_torn_codes(spark):
     spark.catalog.refreshByPath(f"{idx.path}/centroids")
     with pytest.raises(ValueError, match="different coarse codebook"):
         idx.probe_adc(spark, emb.filter(F.col("vec_id") < 3))
+
+
+def _vecs(spark, rows, dim=4):
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in rows],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def test_pq_adc_rejects_residual_codes_without_centroids(spark):
+    corpus = _vecs(spark, [(1, [0.1, 0.2, 0.3, 0.4]), (2, [0.4, 0.3, 0.2, 0.1])])
+    cb = _vecs(spark, [(10, [0.0, 0.0, 0.0, 0.0]), (11, [0.5, 0.5, 0.5, 0.5])])
+    cents = spark.createDataFrame(
+        [(0, [0.0, 0.0, 0.0, 0.0]), (1, [1.0, 1.0, 1.0, 1.0])],
+        "list_id long, embedding array<double>",
+    )
+    codes = pq_codes(corpus, cb, m=2, coarse_centroids=cents)
+    assert "list_id" in codes.columns
+    with pytest.raises(ValueError, match="list_id"):
+        pq_adc_topk(codes, corpus, cb, m=2, k_top=1)
+    # the documented escape hatch for genuinely flat codes still works
+    flat = pq_codes(corpus, cb, m=2)
+    assert pq_adc_topk(flat, corpus, cb, m=2, k_top=1).count() == 2
+
+
+def test_lloyd_mean_rejects_out_of_range_vectors(spark):
+    seeds = _vecs(spark, [(0, [0.0, 0.0, 0.0, 0.0])])
+    train = _vecs(spark, [(1, [0.5, 0.5, 0.5, 2000.0]), (2, [0.1, 0.1, 0.1, 0.1])])
+    with pytest.raises(ValueError, match="1024"):
+        refine_centroids(train, seeds, "vec_id", "embedding", iters=1)
+    # negative out-of-range is the actually-dangerous direction
+    train_neg = _vecs(spark, [(1, [0.5, 0.5, 0.5, -2000.0])])
+    with pytest.raises(ValueError, match="1024"):
+        refine_centroids(train_neg, seeds, "vec_id", "embedding", iters=1)
+    # in-range trains fine
+    assert len(refine_centroids(
+        _vecs(spark, [(1, [0.5, 0.5, 0.5, 0.5])]), seeds,
+        "vec_id", "embedding", iters=1)) == 1

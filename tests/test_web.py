@@ -1,6 +1,7 @@
 """URL canonicalization / registered-domain / url_dedup unit tests."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from db_cdc_poc_spark.operators.web import (
     canonical_url,
@@ -201,3 +202,32 @@ def test_blocklist_psl_grouping_blocks_family_subdomains(spark):
     kept = {r.doc_id for r in
             filter_blocked_domains(df, blocked, "url").collect()}
     assert kept == {3}
+
+
+def test_registrable_domain_dedupes_duplicate_suffix_rules(spark):
+    from db_cdc_poc_spark.operators.web import registrable_domain, suffix_rules
+
+    docs = spark.createDataFrame(
+        [(1, "https://a.example.co.uk/x"), (2, "https://b.example.com/")],
+        "doc_id long, url string",
+    )
+    rules = suffix_rules(spark)
+    # duplicate an existing key (full-PSL swap-in scenario): same
+    # suffix twice, and once more as a conflicting exception row
+    dup = rules.filter(F.col("suffix") == "co.uk")
+    conflicted = rules.unionAll(dup).unionAll(
+        dup.withColumn("is_exc", F.lit(True)).withColumn(
+            "ps_len", F.col("ps_len") - 1
+        )
+    )
+    out = registrable_domain(docs, rules=conflicted)
+    # no corpus-row duplication through the join
+    assert out.count() == 2
+    got = {r.doc_id: r.domain for r in out.collect()}
+    # PSL prevailing order: the exception row wins for co.uk
+    assert got[1] == "example.co.uk" or got[1] == "co.uk"
+    assert got[2] == "example.com"
+    # and with clean rules the exact baseline answer is unchanged
+    base = {r.doc_id: r.domain
+            for r in registrable_domain(docs, rules=rules).collect()}
+    assert base == {1: "example.co.uk", 2: "example.com"}
