@@ -27,17 +27,61 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from db_cdc_poc_spark.checkpointing import materialize
 from db_cdc_poc_spark.operators.cdc import latest_by_key
 from db_cdc_poc_spark.streaming.ephemeral import (
+    discard_ephemeral_dir,
     drain_foreach_batch,
     ephemeral_checkpoint_dir,
 )
-from db_cdc_poc_spark.streaming.state import (
-    BucketedStateTable,
-    unify_schemas,
-    wider_type,
-)
+from db_cdc_poc_spark.streaming.state import BucketedStateTable, unify_schemas
+
+
+def _widen_to(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Cast ``df``'s columns to their (wider) types in ``schema``."""
+    casts = {
+        f.name: F.col(f.name).cast(schema[f.name].dataType)
+        for f in df.schema.fields
+        if f.dataType != schema[f.name].dataType
+    }
+    return df.withColumns(casts) if casts else df
+
+
+def _snapshot_diff(keys: list[str], old: DataFrame, new: DataFrame) -> DataFrame:
+    """The one snapshot diff behind ``CdcTarget.changes_since`` and
+    :func:`state_diff`: a full outer join of two applied views on
+    ``keys``, one ``(keys..., before, after)`` row per key whose row
+    differs, the non-key columns packed into a struct (NULL on the
+    missing side). The payload is the union of both views' columns,
+    numerics widened (:func:`unify_schemas`), so a column added or
+    widened in between is NULL/widened on the older side and a change
+    in it still diffs."""
+    unified = unify_schemas([old.schema, new.schema])
+    val_fields = [f for f in unified.fields if f.name not in keys]
+
+    def payload(df: DataFrame) -> Column:
+        return F.struct(
+            *[
+                (
+                    F.col(f.name).cast(f.dataType)
+                    if f.name in df.columns
+                    else F.lit(None).cast(f.dataType)
+                ).alias(f.name)
+                for f in val_fields
+            ]
+        )
+
+    n = new.select(*keys, payload(new).alias("after"))
+    o = old.select(*keys, payload(old).alias("before"))
+    # unchanged keys produce no row: a replayed identical upsert must
+    # yield an EMPTY delta
+    return n.join(o, keys, "full_outer").filter(
+        F.col("before").isNull()
+        | F.col("after").isNull()
+        | (F.col("before") != F.col("after"))
+    )
 
 
 class CdcTarget:
@@ -85,7 +129,7 @@ class CdcTarget:
         """
 
         def merge(state: DataFrame | None, b: DataFrame) -> DataFrame:
-            # Schema evolution, two safe forms only:
+            # Schema evolution, two safe forms only (unify_schemas):
             # - additive (allowMissingColumns): a batch carrying a NEW
             #   column widens the state, old rows take NULL; a batch
             #   missing a state column keeps it, its rows take NULL.
@@ -95,57 +139,40 @@ class CdcTarget:
             #   buckets up-cast on read (state._read_chains).
             # Drops/renames/cross-family changes stay hard errors —
             # silent coercion corrupts CDC state.
+            merged = b
             if state is not None:
-                s_types = {f.name: f.dataType for f in state.schema.fields}
-                for f in b.schema.fields:
-                    st = s_types.get(f.name)
-                    if st is None or st == f.dataType:
-                        continue
-                    w = wider_type(st, f.dataType)
-                    if w is None:
-                        raise TypeError(
-                            f"CDC batch column {f.name!r} has type "
-                            f"{f.dataType.simpleString()} but state has "
-                            f"{st.simpleString()}; only in-family numeric "
-                            "widening is supported"
-                        )
-                    if st != w:
-                        state = state.withColumn(f.name, F.col(f.name).cast(w))
-                    if f.dataType != w:
-                        b = b.withColumn(f.name, F.col(f.name).cast(w))
-            merged = (
-                state.unionByName(b, allowMissingColumns=True)
-                if state is not None
-                else b
-            )
+                unified = unify_schemas([state.schema, b.schema])
+                merged = _widen_to(state, unified).unionByName(
+                    _widen_to(b, unified), allowMissingColumns=True
+                )
             return latest_by_key(merged, self.keys, self.sequence_by, self.tie_breakers)
 
         self.state.merge_batch(batch, merge)
 
     # -- read -------------------------------------------------------------
 
-    def current(self, spark: SparkSession) -> DataFrame:
-        """The applied table: latest rows, deletes filtered, bookkeeping
-        columns dropped — what ``dlt.apply_changes`` exposes."""
-        state = self.state.state_for(spark)
+    def _applied(self, state: DataFrame | None, missing: str) -> DataFrame:
+        """State rows -> the applied view: deletes filtered, bookkeeping
+        columns dropped. ``missing`` completes the error for no state."""
         if state is None:
-            raise ValueError(f"CDC target {self.path} has no state yet")
+            raise ValueError(f"CDC target {self.path} {missing}")
         if self.apply_as_deletes is not None:
             state = state.filter(~F.expr(self.apply_as_deletes))
         drop = [c for c in self.except_columns if c in state.columns]
         return state.drop(*drop) if drop else state
 
+    def current(self, spark: SparkSession) -> DataFrame:
+        """The applied table: latest rows, deletes filtered, bookkeeping
+        columns dropped — what ``dlt.apply_changes`` exposes."""
+        return self._applied(self.state.state_for(spark), "has no state yet")
+
     def current_at(self, spark: SparkSession, commit: int) -> DataFrame:
         """Time travel: the applied table as of an earlier micro-batch
         commit (``state.commits()`` lists them; retention bounded by
         ``keep_versions`` — see ``BucketedStateTable.state_at``)."""
-        state = self.state.state_at(spark, commit)
-        if state is None:
-            raise ValueError(f"CDC target {self.path} empty at commit {commit}")
-        if self.apply_as_deletes is not None:
-            state = state.filter(~F.expr(self.apply_as_deletes))
-        drop = [c for c in self.except_columns if c in state.columns]
-        return state.drop(*drop) if drop else state
+        return self._applied(
+            self.state.state_at(spark, commit), f"empty at commit {commit}"
+        )
 
     def changes_since(
         self,
@@ -177,13 +204,14 @@ class CdcTarget:
         those keys — pass the trigger's batch keys to keep the work
         batch-bounded instead of state-bounded.
         """
-        from pyspark.sql import types as T
-
-        new = self.current(spark)
-        if keys_filter is not None:
-            new = new.join(
+        def only_filtered(df: DataFrame) -> DataFrame:
+            if keys_filter is None:
+                return df
+            return df.join(
                 F.broadcast(keys_filter.select(*self.keys).distinct()), self.keys
             )
+
+        new = only_filtered(self.current(spark))
         if commit is None:
             payload_fields = [
                 f for f in new.schema.fields if f.name not in self.keys
@@ -196,49 +224,15 @@ class CdcTarget:
                 .alias("before"),
                 F.struct(*[f.name for f in payload_fields]).alias("after"),
             )
-        old = self.current_at(spark, commit)
-        if keys_filter is not None:
-            old = old.join(
-                F.broadcast(keys_filter.select(*self.keys).distinct()), self.keys
-            )
-        # payload = UNION of both snapshots' columns, numerics widened:
-        # upsert_batch supports additive evolution, so a column added
-        # (or int->long widened) between the watermark commit and now
-        # must appear NULL/widened on the old side, not blow up the
-        # time-travel select — same contract as state_diff below.
-        unified = unify_schemas([old.schema, new.schema])
-        val_fields = [f for f in unified.fields if f.name not in self.keys]
-
-        def _payload_struct(df: DataFrame) -> Column:
-            return F.struct(
-                *[
-                    (
-                        F.col(f.name).cast(f.dataType)
-                        if f.name in df.columns
-                        else F.lit(None).cast(f.dataType)
-                    ).alias(f.name)
-                    for f in val_fields
-                ]
-            )
-
-        n = new.select(*self.keys, _payload_struct(new).alias("after"))
-        o = old.select(*self.keys, _payload_struct(old).alias("before"))
-        joined = n.join(o, self.keys, "full_outer")
-        return (
-            joined.withColumn(
-                "op",
-                F.when(F.col("before").isNull(), F.lit("c"))
-                .when(F.col("after").isNull(), F.lit("d"))
-                .otherwise(F.lit("u")),
-            )
-            # unchanged keys produce no row: a replayed identical
-            # upsert must yield an EMPTY delta
-            .filter(
-                F.col("before").isNull()
-                | F.col("after").isNull()
-                | (F.col("before") != F.col("after"))
-            )
-            .select(*self.keys, "op", "before", "after")
+        old = only_filtered(self.current_at(spark, commit))
+        return _snapshot_diff(self.keys, old, new).select(
+            *self.keys,
+            F.when(F.col("before").isNull(), F.lit("c"))
+            .when(F.col("after").isNull(), F.lit("d"))
+            .otherwise(F.lit("u"))
+            .alias("op"),
+            "before",
+            "after",
         )
 
 
@@ -268,9 +262,12 @@ def stream_apply_changes(
     earlier run committed, so only new files merge into the state —
     no double application (asserted in the restart test). This is the
     fault-tolerance contract (T6) the reference delegates to DLT.
+    Without ``state_path`` the state is scratch: the result is pinned
+    and the state released.
     """
+    path = state_path or ephemeral_checkpoint_dir("cdc_state_")
     target = CdcTarget(
-        state_path or ephemeral_checkpoint_dir("cdc_state_"),
+        path,
         keys=keys,
         sequence_by=sequence_by,
         apply_as_deletes=apply_as_deletes,
@@ -278,15 +275,20 @@ def stream_apply_changes(
         tie_breakers=tie_breakers,
         num_buckets=num_buckets,
     )
-    drain_foreach_batch(
-        spark,
-        source_path,
-        target.upsert_batch,
-        "cdc",
-        max_files_per_trigger,
-        checkpoint_path=checkpoint_path,
-    )
-    return target.current(spark)
+    try:
+        drain_foreach_batch(
+            spark,
+            source_path,
+            target.upsert_batch,
+            "cdc",
+            max_files_per_trigger,
+            checkpoint_path=checkpoint_path,
+        )
+        current = target.current(spark)
+        return current if state_path else materialize(current, label="cdc-applied")
+    finally:
+        if state_path is None:
+            discard_ephemeral_dir(path)
 
 
 def state_diff(
@@ -309,35 +311,15 @@ def state_diff(
 
     Output: key columns + ``change_kind``.
     """
-    a = target.current_at(spark, from_commit)
-    b = target.current_at(spark, to_commit)
-    keys = target.keys
-    # value columns = the UNION of both snapshots' columns: the sink
-    # supports additive schema evolution, so a column added between the
-    # commits must participate (NULL on the side that predates it) or a
-    # row whose only change is in the new column would diff as
-    # unchanged
-    types = {f.name: f.dataType for f in [*a.schema.fields, *b.schema.fields]}
-    val_cols = sorted(c for c in types if c not in keys)
-
-    def _struct(df: DataFrame) -> Column:
-        return F.struct(
-            *[
-                F.col(c) if c in df.columns else F.lit(None).cast(types[c]).alias(c)
-                for c in val_cols
-            ]
-        )
-
-    sa = a.select(*keys, _struct(a).alias("__va"))
-    sb = b.select(*keys, _struct(b).alias("__vb"))
-    joined = sa.join(sb, keys, "full_outer")
-    kind = (
-        F.when(F.col("__va").isNull(), F.lit("added"))
-        .when(F.col("__vb").isNull(), F.lit("removed"))
-        .when(F.col("__va") != F.col("__vb"), F.lit("changed"))
+    diff = _snapshot_diff(
+        target.keys,
+        target.current_at(spark, from_commit),
+        target.current_at(spark, to_commit),
     )
-    return (
-        joined.withColumn("change_kind", kind)
-        .filter(F.col("change_kind").isNotNull())
-        .select(*keys, "change_kind")
+    return diff.select(
+        *target.keys,
+        F.when(F.col("before").isNull(), F.lit("added"))
+        .when(F.col("after").isNull(), F.lit("removed"))
+        .otherwise(F.lit("changed"))
+        .alias("change_kind"),
     )

@@ -75,12 +75,7 @@ from db_cdc_poc_spark.checkpointing import materialize
 from db_cdc_poc_spark.operators.dedup import est_jaccard_col, minhash_bands
 from db_cdc_poc_spark.streaming.bloom import BloomFront
 from db_cdc_poc_spark.streaming.lease import WriterLease
-from db_cdc_poc_spark.streaming.state import BucketedStateTable
-
-
-def _bucket_of(d: Path) -> int:
-    """Bucket id of a version dir (``.../bucket_0007/v_...``)."""
-    return int(d.parent.name.split("_")[1])
+from db_cdc_poc_spark.streaming.state import BucketedStateTable, is_delta
 
 
 class StreamingDedupIndex:
@@ -283,40 +278,31 @@ class StreamingDedupIndex:
         bands = self.state.state_for(spark)
         if bands is None or "sig" not in bands.columns:
             return 0
-        transient = not self._lease.held
-        if transient:
-            self._lease.acquire()
-        try:
-            return self._migrate_legacy_held(spark, bands)
-        finally:
-            if transient:
-                self._lease.release()
-
-    def _migrate_legacy_held(self, spark: SparkSession, bands: DataFrame) -> int:
-        self._lease.check()
-        legacy_sigs = bands.select("id", "sig").dropDuplicates(["id"])
-        existing = self.sigs.state_for(spark)
-        if existing is not None:
-            legacy_sigs = legacy_sigs.join(
-                existing.select("id"), "id", "left_anti"
+        with self._lease.hold():
+            self._lease.check()
+            legacy_sigs = bands.select("id", "sig").dropDuplicates(["id"])
+            existing = self.sigs.state_for(spark)
+            if existing is not None:
+                legacy_sigs = legacy_sigs.join(
+                    existing.select("id"), "id", "left_anti"
+                )
+            # the anti-join output is consumed twice (count + append):
+            # pin it so the second pass can't see a half-appended sig table
+            legacy_sigs = materialize(
+                legacy_sigs, self.checkpoint_dir, label="dedup-migrate-sigs"
             )
-        # the anti-join output is consumed twice (count + append):
-        # pin it so the second pass can't see a half-appended sig table
-        legacy_sigs = materialize(
-            legacy_sigs, self.checkpoint_dir, label="dedup-migrate-sigs"
-        )
-        n = legacy_sigs.count()
-        if n:
-            self.sigs.append_batch(legacy_sigs)
-        # rewrite every populated band bucket without the sig column;
-        # merge_batch versions each chain (rename-commit), so a crash
-        # mid-rewrite leaves some chains migrated and some legacy —
-        # the layout check re-triggers and this method re-runs cleanly
-        self.state.merge_batch(
-            bands.select("band_id", "band_hash", "id"),
-            lambda state, _batch: state.drop("sig"),
-        )
-        return int(n)
+            n = legacy_sigs.count()
+            if n:
+                self.sigs.append_batch(legacy_sigs)
+            # rewrite every populated band bucket without the sig column;
+            # merge_batch versions each chain (rename-commit), so a crash
+            # mid-rewrite leaves some chains migrated and some legacy —
+            # the layout check re-triggers and this method re-runs cleanly
+            self.state.merge_batch(
+                bands.select("band_id", "band_hash", "id"),
+                lambda state, _batch: state.drop("sig"),
+            )
+            return int(n)
 
     def _index_matches(
         self, spark: SparkSession, banded: DataFrame, index: DataFrame | None
@@ -347,12 +333,12 @@ class StreamingDedupIndex:
             keys.setdefault(int(r["bk"]), []).append(int(r["kh"]))
         if not keys:
             return self._empty_pairs(banded)
-        sdirs = self.sigs.chain_dirs_for(sorted(keys))
         slive = [
             d
-            for d in sdirs
+            for b, chain in self.sigs.chains(sorted(keys)).items()
+            for d in chain
             if self._sig_bloom.might_contain_any(
-                d, np.asarray(keys[_bucket_of(d)], dtype=np.int64)
+                d, np.asarray(keys[b], dtype=np.int64)
             )
         ]
         index_sigs = self.sigs.read_dirs(spark, slive)
@@ -399,19 +385,9 @@ class StreamingDedupIndex:
         and resume from the decisions file instead of re-probing.
         """
         spark = docs.sparkSession
-        # writer lease: held for the batch's whole mutate window; a
-        # caller that acquired explicitly (long-lived ingest loop)
-        # keeps its hold, otherwise acquire/release per batch so
-        # sequential writers (crash re-fires, resumed instances) never
-        # block each other
-        transient = not self._lease.held
-        if transient:
-            self._lease.acquire()
-        try:
+        # writer lease held for the batch's whole mutate window
+        with self._lease.hold():
             return self._process_batch_held(spark, docs)
-        finally:
-            if transient:
-                self._lease.release()
 
     def _process_batch_held(self, spark: SparkSession, docs: DataFrame) -> DataFrame:
         if self.compact_every is not None and (
@@ -451,13 +427,11 @@ class StreamingDedupIndex:
             # whose Bloom might hold one of the batch's band hashes —
             # probe I/O follows the collision-bearing dirs, not the
             # accumulated index (the round-9 soak's residual creep)
-            dirs = (
-                self.state.chain_dirs_for(sorted(by_bucket)) if by_bucket else []
-            )
             live = [
                 d
-                for d in dirs
-                if self._band_bloom.might_contain_any(d, hash_arrs[_bucket_of(d)])
+                for b, chain in self.state.chains(sorted(by_bucket)).items()
+                for d in chain
+                if self._band_bloom.might_contain_any(d, hash_arrs[b])
             ]
             index = self.state.read_dirs(spark, live)
             self._check_layout(index)
@@ -515,16 +489,15 @@ class StreamingDedupIndex:
                 .collect()
             ):
                 sig_keys.setdefault(int(r["bk"]), []).append(int(r["kh"]))
-            for d in self.sigs.append_batch(batch_sigs):
+            for b, d in self.sigs.append_batch(batch_sigs).items():
                 self._sig_bloom.write(
-                    d, np.asarray(sig_keys.get(_bucket_of(d), []), dtype=np.int64)
+                    d, np.asarray(sig_keys.get(b, []), dtype=np.int64)
                 )
-            for d in self.state.append_batch(
+            for b, d in self.state.append_batch(
                 banded.select("band_id", "band_hash", "id")
-            ):
+            ).items():
                 self._band_bloom.write(
-                    d,
-                    hash_arrs.get(_bucket_of(d), np.empty(0, dtype=np.int64)),
+                    d, hash_arrs.get(b, np.empty(0, dtype=np.int64))
                 )
             # cadence bookkeeping only — the compaction itself runs at
             # the START of the next batch (see docstring: keeps the
@@ -543,15 +516,14 @@ class StreamingDedupIndex:
         and crashed-and-re-fired triggers append deltas the counter
         never saw. Disk-derived cadence is restart-proof and
         self-heals crash-inflated chains on the next batch."""
-        n = 0
-        for table in (self.state, self.sigs):
-            for b in range(table.num_buckets):
-                chain = table.chain_dirs_for([b])
-                if not chain:
-                    continue
-                deltas = len(chain) - (0 if chain[0].name.endswith(".d") else 1)
-                n = max(n, deltas)
-        return n
+        return max(
+            (
+                sum(map(is_delta, chain))
+                for table in (self.state, self.sigs)
+                for chain in table.delta_chains().values()
+            ),
+            default=0,
+        )
 
     def compact(self, spark: SparkSession) -> dict:
         """Fold both tables' delta chains into one snapshot version per
@@ -561,10 +533,7 @@ class StreamingDedupIndex:
         snapshot's Bloom is the OR of its source versions' Blooms
         (exact: a snapshot holds precisely the union of its sources'
         rows) — no key re-scan, no corpus-sized driver traffic."""
-        transient = not self._lease.held
-        if transient:
-            self._lease.acquire()
-        try:
+        with self._lease.hold():
             self._lease.check()
             self._batches_since_compact = 0
             return {
@@ -575,9 +544,6 @@ class StreamingDedupIndex:
                     spark, self.sigs, self._sig_bloom
                 ),
             }
-        finally:
-            if transient:
-                self._lease.release()
 
     def acquire_writer_lease(self, force: bool = False) -> int:
         """Hold the writer lease across batches (long-lived ingest
@@ -591,14 +557,7 @@ class StreamingDedupIndex:
     def _compact_table(spark: SparkSession, table: BucketedStateTable, bloom: BloomFront) -> int:
         # record each to-be-folded chain and pull its Blooms into the
         # cache BEFORE snapshot prunes the source dirs off disk
-        pre = {
-            b: table.chain_dirs_for([b]) for b in range(table.num_buckets)
-        }
-        todo = {
-            b: chain
-            for b, chain in pre.items()
-            if len(chain) > 1 or any(p.name.endswith(".d") for p in chain)
-        }
+        todo = table.delta_chains()
         unionable = {
             b: all(bloom.loadable(d) for d in chain)
             for b, chain in todo.items()
@@ -607,7 +566,7 @@ class StreamingDedupIndex:
         for b, chain in todo.items():
             if not unionable[b]:
                 continue  # a source lacked a Bloom: snapshot stays unprunable
-            new = table.chain_dirs_for([b])
+            new = table.chains([b]).get(b, [])
             if len(new) == 1:
                 bloom.union_write(new[0], chain)
         return n

@@ -36,8 +36,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from db_cdc_poc_spark.checkpointing import materialize
 from db_cdc_poc_spark.sources.exchange import local_df
 from db_cdc_poc_spark.streaming.ephemeral import (
+    discard_ephemeral_dir,
     drain_foreach_batch,
     ephemeral_checkpoint_dir,
 )
@@ -345,14 +347,16 @@ def stream_gold_inventory(
     """Corrected-change file stream -> foreachBatch incremental gold ->
     final table. Equals the batch gold recompute over the same inputs
     regardless of micro-batch boundaries (asserted in tests across >=3
-    batches with ``maxFilesPerTrigger=1``)."""
-    gold = IncrementalGold(
-        state_path or ephemeral_checkpoint_dir("gold_state_"),
-        snapshot,
-        keys=keys,
-        num_buckets=num_buckets,
-    )
-    drain_foreach_batch(
-        spark, changes_path, gold.apply_changes_batch, "gold", max_files_per_trigger
-    )
-    return gold.current(spark)
+    batches with ``maxFilesPerTrigger=1``). Without ``state_path`` the
+    state is scratch: the result is pinned and the state released."""
+    path = state_path or ephemeral_checkpoint_dir("gold_state_")
+    try:
+        gold = IncrementalGold(path, snapshot, keys=keys, num_buckets=num_buckets)
+        drain_foreach_batch(
+            spark, changes_path, gold.apply_changes_batch, "gold", max_files_per_trigger
+        )
+        current = gold.current(spark)
+        return current if state_path else materialize(current, label="gold-current")
+    finally:
+        if state_path is None:
+            discard_ephemeral_dir(path)

@@ -22,6 +22,9 @@ contract enforceable:
   (cross-host crash, where pids can't be probed — the 100 TB posture:
   executors/drivers on other machines are only observable through
   time). ``force=True`` is the operator override.
+* Every mutation runs inside the one writer window,
+  :meth:`WriterLease.hold`: acquire unless already held, release only
+  what it acquired — so sequential writers never block each other.
 
 The lease file is one JSON object written atomically (tmp +
 ``os.replace``); first-ever creation uses ``O_EXCL`` so two
@@ -217,6 +220,20 @@ class WriterLease:
                 f"(token {cur['token'] if cur else '-'} vs held "
                 f"{self.token}); aborting before a stale mutation."
             )
+
+    @contextmanager
+    def hold(self):
+        """The writer window: acquire unless already held, release on
+        exit only if this window acquired. Call :meth:`check`
+        immediately before each mutation inside it."""
+        transient = not self.held
+        if transient:
+            self.acquire()
+        try:
+            yield
+        finally:
+            if transient:
+                self.release()
 
     def release(self) -> None:
         """Drop the lease if still held by this writer. The FILE stays

@@ -9,30 +9,32 @@ Layout::
 
 Keys route to buckets via ``pmod(xxhash64(keys...), num_buckets)`` —
 deterministic across sessions. Each bucket is an independent version
-chain; a micro-batch rewrites ONLY the chains its keys hash into, so
-merge I/O is O(|touched state|) rather than O(|total state|). Versioned
-directories exist because Spark cannot overwrite a parquet path it is
-concurrently reading; the per-bucket directory rename is the commit
-(atomic on local FS/HDFS; swap for the store's commit protocol — or for
-Delta/Iceberg MERGE — on object stores).
+chain: its last FULL version (``v_N``) plus every DELTA (``v_N.d``)
+after it. A micro-batch rewrites ONLY the chains its keys hash into,
+so merge I/O is O(|touched state|) rather than O(|total state|).
+Versioned directories exist because Spark cannot overwrite a parquet
+path it is concurrently reading; the per-bucket directory rename is
+the commit (atomic on local FS/HDFS; swap for the store's commit
+protocol — or for Delta/Iceberg MERGE — on object stores). Only this
+module knows the layout: callers see it through
+:meth:`BucketedStateTable.chains`, :meth:`~BucketedStateTable.delta_chains`
+and :func:`is_delta`.
 
 The merge semantics are pluggable: ``merge_batch`` hands the caller the
 touched-bucket state (or ``None``) plus the batch and writes whatever
 the callback returns. ``streaming/cdc.py`` plugs in latest-row-per-key;
 ``streaming/gold.py`` plugs in an associative aggregate accumulate.
+Schema evolution has one rule, :func:`unify_schemas`.
 
-Single-writer contract, ENFORCED HERE (round 13): every mutator
-(:meth:`BucketedStateTable.merge_batch` / :meth:`append_batch` /
-:meth:`snapshot`) runs under the table's :class:`WriterLease`
-(``<path>/_table_writer_lease.json``) — acquire before the merge work,
-re-:meth:`check` immediately before the first commit rename, release
-after (unless the caller holds the lease across a longer window via
-``table.lease.acquire()``). Round 12 fenced only the streaming dedup
-index at ITS root; a double-fired CDC apply or incremental-gold
-trigger could still interleave appends (VERDICT r12 ask #5). The lease
-file name differs from the index-level ``_writer_lease.json`` on
-purpose: the dedup index's state table sits at the index root, and the
-two leases have different owners in the same process.
+One commit protocol: every mutator runs inside the table lease's
+writer window (:meth:`WriterLease.hold` on
+``<path>/_table_writer_lease.json``) and commits through
+:meth:`BucketedStateTable._commit` — stage, fence-check, rename,
+prune, record — so a foreachBatch sink makes exactly one commit per
+epoch, in one function. The lease file name differs from the
+index-level ``_writer_lease.json`` on purpose: the dedup index's state
+table sits at the index root, under a different owner in the same
+process.
 """
 
 from __future__ import annotations
@@ -41,7 +43,6 @@ import json
 import shutil
 import tempfile
 from collections.abc import Callable, Sequence
-from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -97,6 +98,13 @@ def unify_schemas(schemas: Sequence[T.StructType]) -> T.StructType:
 MergeFn = Callable[[DataFrame | None, DataFrame], DataFrame]
 
 
+def is_delta(version_dir: Path) -> bool:
+    """Whether a chain's version dir is a delta (``v_N.d``, written by
+    :meth:`BucketedStateTable.append_batch`) rather than a full
+    snapshot (``v_N``)."""
+    return version_dir.name.endswith(".d")
+
+
 class StateVersionVacuumedError(RuntimeError):
     """A time-travel read hit a version already pruned by
     ``keep_versions`` — the Delta-vacuum tradeoff, surfaced loudly."""
@@ -133,20 +141,6 @@ class BucketedStateTable:
             self.path / "_table_writer_lease.json", ttl=lease_ttl
         )
 
-    @contextmanager
-    def _writer(self):
-        """Transient writer window: acquire unless the caller already
-        holds the lease, yield a ``check`` callable for the
-        check-before-mutate point, release only what we acquired."""
-        transient = not self.lease.held
-        if transient:
-            self.lease.acquire()
-        try:
-            yield self.lease.check
-        finally:
-            if transient:
-                self.lease.release()
-
     # -- bucket routing ---------------------------------------------------
 
     def bucket_expr(self) -> Column:
@@ -177,31 +171,39 @@ class BucketedStateTable:
             vs = [p for p in vs if p.name <= upto_name]
         start = 0
         for i in range(len(vs) - 1, -1, -1):
-            if not vs[i].name.endswith(".d"):
+            if not is_delta(vs[i]):
                 start = i
                 break
         return vs[start:]
 
-    def _latest_paths(self, buckets: Sequence[int] | None = None) -> list[Path]:
-        out: list[Path] = []
-        for b in range(self.num_buckets) if buckets is None else buckets:
-            out.extend(self._chain_dirs(b))
-        return out
-
-    def chain_dirs_for(self, buckets: Sequence[int] | None = None) -> list[Path]:
-        """Public view of the readable version-dir set (latest full
-        snapshot + later deltas per bucket) — for callers that prune
-        dirs with their own side metadata (e.g. the dedup index's
-        per-version Bloom front) before handing a subset to
+    def chains(self, buckets: Sequence[int] | None = None) -> dict[int, list[Path]]:
+        """The layout's public view: bucket -> its readable chain
+        (latest full snapshot + later deltas), for every bucket that
+        has one (all buckets if ``buckets`` is None). For callers that
+        prune dirs with their own side metadata (e.g. the dedup
+        index's per-version Bloom front) before handing a subset to
         :meth:`read_dirs`. Version dirs are immutable once committed,
         so per-dir metadata and caches keyed on them stay valid."""
-        return self._latest_paths(buckets)
+        out: dict[int, list[Path]] = {}
+        for b in range(self.num_buckets) if buckets is None else buckets:
+            if chain := self._chain_dirs(b):
+                out[b] = chain
+        return out
+
+    def delta_chains(self) -> dict[int, list[Path]]:
+        """The chains that hold deltas — exactly the buckets
+        :meth:`snapshot` compacts."""
+        return {
+            b: chain
+            for b, chain in self.chains().items()
+            if any(is_delta(p) for p in chain)
+        }
 
     def read_dirs(self, spark: SparkSession, dirs: Sequence[Path]) -> DataFrame | None:
         """Read an explicit subset of version dirs (from
-        :meth:`chain_dirs_for`) under one reconciled schema; ``None``
-        for an empty subset. Safe only for APPEND-ONLY state, where
-        skipping a version dir skips whole rows, never an update."""
+        :meth:`chains`) under one reconciled schema; ``None`` for an
+        empty subset. Safe only for APPEND-ONLY state, where skipping
+        a version dir skips whole rows, never an update."""
         if not dirs:
             return None
         return self._read_chains(spark, list(dirs))
@@ -270,7 +272,7 @@ class BucketedStateTable:
     ) -> DataFrame | None:
         """Latest state of the given buckets (all buckets if None);
         ``None`` when no chain exists yet."""
-        paths = self._latest_paths(buckets)
+        paths = [d for chain in self.chains(buckets).values() for d in chain]
         if not paths:
             return None
         return self._read_chains(spark, paths)
@@ -300,52 +302,46 @@ class BucketedStateTable:
             schemas = [spark.read.parquet(s).schema for s in strs]
             return spark.read.schema(unify_schemas(schemas)).parquet(*strs)
 
-    # -- merge ------------------------------------------------------------
+    # -- commit protocol ---------------------------------------------------
 
-    def merge_batch(self, batch: DataFrame, merge_fn: MergeFn) -> None:
-        """new state (touched buckets only) = merge_fn(state, batch).
+    def _commit(self, rows: DataFrame, delta: bool) -> dict[int, Path]:
+        """The one stage-fence-commit, run inside the writer window.
 
-        Reads only the chains the batch's keys hash into, writes the
-        callback's result partitioned by bucket in ONE job, then commits
-        each touched chain's next version by directory rename. The
-        callback sees plain key rows — no bucket column on either side.
-        """
-        spark = batch.sparkSession
-        batch = batch.withColumn(BUCKET_COL, self.bucket_expr())
-        # at most num_buckets values — tiny driver-side set
-        touched = sorted(r[0] for r in batch.select(BUCKET_COL).distinct().collect())
-        if not touched:
-            return
-        with self._writer() as check:
-            state = self.state_for(spark, touched)
-            new_state = merge_fn(state, batch.drop(BUCKET_COL))
-            staging = Path(tempfile.mkdtemp(prefix="state_staging_", dir=self.path))
-            try:
-                new_state.withColumn(BUCKET_COL, self.bucket_expr()).write.partitionBy(
-                    BUCKET_COL
-                ).mode("overwrite").parquet(str(staging))
-                check()  # fenced? abort BEFORE the first commit rename
-                for b in touched:
-                    src = staging / f"{BUCKET_COL}={b}"
-                    if not src.is_dir():
-                        # merge produced no rows for this bucket (e.g. batch
-                        # keys unknown to an inner-join merge) — chain unchanged
-                        continue
-                    versions = self._versions(b)
-                    next_n = self._vnum(versions[-1]) + 1 if versions else 0
-                    self._bucket_dir(b).mkdir(exist_ok=True)
-                    src.rename(self._bucket_dir(b) / f"v_{next_n:08d}")
+        Stages ``rows`` partitioned by bucket in ONE write job,
+        re-checks the fencing token (a displaced writer aborts BEFORE
+        the first rename), renames each staged bucket to its chain's
+        next version — a delta ``v_N.d`` or a full ``v_N`` (then old
+        full versions are pruned) — and records the commit. A bucket
+        with no rows keeps its chain unchanged. Returns bucket -> the
+        created version dir (immutable once committed)."""
+        staging = Path(tempfile.mkdtemp(prefix="state_staging_", dir=self.path))
+        try:
+            rows.withColumn(BUCKET_COL, self.bucket_expr()).write.partitionBy(
+                BUCKET_COL
+            ).mode("overwrite").parquet(str(staging))
+            self.lease.check()
+            created: dict[int, Path] = {}
+            for src in sorted(staging.glob(f"{BUCKET_COL}=*")):
+                b = int(src.name.split("=")[1])
+                versions = self._versions(b)
+                next_n = self._vnum(versions[-1]) + 1 if versions else 0
+                self._bucket_dir(b).mkdir(exist_ok=True)
+                dst = self._bucket_dir(b) / f"v_{next_n:08d}{'.d' if delta else ''}"
+                src.rename(dst)
+                if not delta:
                     self._prune(b)
-                self._record_commit()
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
+                created[b] = dst
+            self._record_commit()
+            return created
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
 
     def _prune(self, b: int) -> None:
         """Retention: keep the last ``keep_versions`` FULL snapshots
         plus every delta newer than the oldest kept snapshot (those
         deltas are still reachable by time travel to commits between
         the kept snapshots); everything older is vacuumed."""
-        fulls = [p for p in self._versions(b) if not p.name.endswith(".d")]
+        fulls = [p for p in self._versions(b) if not is_delta(p)]
         if len(fulls) <= self.keep_versions:
             return
         cutoff = fulls[-self.keep_versions].name
@@ -353,12 +349,33 @@ class BucketedStateTable:
             if old.name < cutoff:
                 shutil.rmtree(old, ignore_errors=True)
 
-    def append_batch(self, batch: DataFrame) -> list[Path]:
+    # -- mutators -----------------------------------------------------------
+
+    def merge_batch(self, batch: DataFrame, merge_fn: MergeFn) -> None:
+        """new state (touched buckets only) = merge_fn(state, batch).
+
+        Reads only the chains the batch's keys hash into and commits
+        the callback's result as each touched chain's next full
+        version. The callback sees plain key rows — no bucket column
+        on either side.
+        """
+        spark = batch.sparkSession
+        batch = batch.withColumn(BUCKET_COL, self.bucket_expr())
+        # at most num_buckets values — tiny driver-side set
+        touched = sorted(r[0] for r in batch.select(BUCKET_COL).distinct().collect())
+        if not touched:
+            return
+        with self.lease.hold():
+            state = self.state_for(spark, touched)
+            self._commit(merge_fn(state, batch.drop(BUCKET_COL)), delta=False)
+
+    def append_batch(self, batch: DataFrame) -> dict[int, Path]:
         """LSM-style APPEND: write only the batch's rows, as one DELTA
         version (``v_N.d``) per touched bucket — I/O is O(batch), vs
         :meth:`merge_batch`'s O(touched state) read-union-rewrite.
-        Returns the created version dirs (immutable once committed) so
-        callers can attach side metadata (e.g. Bloom summaries).
+        Returns bucket -> created version dir (immutable once
+        committed) so callers can attach side metadata (e.g. Bloom
+        summaries).
 
         For append-only state (the streaming dedup index: every seen
         row stays forever) merge_batch's rewrite is pure write
@@ -372,58 +389,17 @@ class BucketedStateTable:
         one full version (call it on a maintenance cadence, exactly
         like parquet small-file compaction — same tradeoff, same
         loop)."""
-        spark = batch.sparkSession  # noqa: F841 - parity with merge_batch
-        batch = batch.withColumn(BUCKET_COL, self.bucket_expr())
-        staging = Path(tempfile.mkdtemp(prefix="state_staging_", dir=self.path))
-        created: list[Path] = []
-        with self._writer() as check:
-            try:
-                batch.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(
-                    str(staging)
-                )
-                check()  # fenced? abort BEFORE the first commit rename
-                for src in sorted(staging.glob(f"{BUCKET_COL}=*")):
-                    b = int(src.name.split("=")[1])
-                    versions = self._versions(b)
-                    next_n = self._vnum(versions[-1]) + 1 if versions else 0
-                    self._bucket_dir(b).mkdir(exist_ok=True)
-                    dst = self._bucket_dir(b) / f"v_{next_n:08d}.d"
-                    src.rename(dst)
-                    created.append(dst)
-                self._record_commit()
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
-        return created
+        with self.lease.hold():
+            return self._commit(batch, delta=True)
 
     def snapshot(self, spark: SparkSession) -> int:
-        """Compact every bucket whose chain holds deltas into one full
-        snapshot version (the LSM compaction). Returns the number of
-        buckets compacted. Content is unchanged (asserted in tests);
-        read fan-in per bucket drops back to one directory."""
-        todo = [
-            b
-            for b in range(self.num_buckets)
-            if len(self._chain_dirs(b)) > 1
-            or any(p.name.endswith(".d") for p in self._chain_dirs(b))
-        ]
+        """Compact every chain that holds deltas (:meth:`delta_chains`)
+        into one full snapshot version (the LSM compaction). Returns
+        the number of buckets compacted. Content is unchanged (asserted
+        in tests); read fan-in per bucket drops back to one directory."""
+        todo = sorted(self.delta_chains())
         if not todo:
             return 0
-        with self._writer() as check:
-            state = self._read_chains(spark, self._latest_paths(todo))
-            staging = Path(tempfile.mkdtemp(prefix="state_staging_", dir=self.path))
-            try:
-                state.withColumn(BUCKET_COL, self.bucket_expr()).write.partitionBy(
-                    BUCKET_COL
-                ).mode("overwrite").parquet(str(staging))
-                check()  # fenced? abort BEFORE the first commit rename
-                for b in todo:
-                    src = staging / f"{BUCKET_COL}={b}"
-                    if not src.is_dir():
-                        continue
-                    next_n = self._vnum(self._versions(b)[-1]) + 1
-                    src.rename(self._bucket_dir(b) / f"v_{next_n:08d}")
-                    self._prune(b)
-                self._record_commit()
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
+        with self.lease.hold():
+            self._commit(self.state_for(spark, todo), delta=False)
         return len(todo)

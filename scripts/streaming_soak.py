@@ -157,9 +157,7 @@ def dedup_soak(spark, lines: list[str]) -> bool:
     # remain on disk as retained history until the NEXT compaction
     # cycle prunes past them — the same keep_versions vacuum tradeoff
     # as full snapshots, documented in BucketedStateTable._prune)
-    fan_in = max(
-        len(idx.state._chain_dirs(b)) for b in range(idx.state.num_buckets)
-    )
+    fan_in = max(len(chain) for chain in idx.state.chains().values())
     lines.append(
         f"compact(): {res} rows {pre_rows} -> {post} "
         f"max read fan-in per bucket: {fan_in} dir(s)"

@@ -13,12 +13,14 @@ import numpy as np
 from db_cdc_poc_spark.streaming.bloom import BloomFront
 
 
-def _front(m: int = 1 << 12) -> tuple[BloomFront, Path]:
-    return BloomFront("_t_bloom.npz", m), Path(tempfile.mkdtemp(prefix="bloomt_"))
+def _front(tmp_path: Path, m: int = 1 << 12) -> tuple[BloomFront, Path]:
+    return BloomFront("_t_bloom.npz", m), Path(
+        tempfile.mkdtemp(prefix="bloomt_", dir=tmp_path)
+    )
 
 
-def test_no_false_negatives_and_prunes_disjoint():
-    bf, d = _front()
+def test_no_false_negatives_and_prunes_disjoint(tmp_path):
+    bf, d = _front(tmp_path)
     rng = np.random.RandomState(3)
     keys = rng.randint(-(2**62), 2**62, size=500, dtype=np.int64)
     bf.write(d, keys)
@@ -28,7 +30,7 @@ def test_no_false_negatives_and_prunes_disjoint():
         assert bf.might_contain_any(d, np.asarray([k], dtype=np.int64))
     # a disjoint probe set is (overwhelmingly) pruned; with 500 keys in
     # 4096 bits the filter is dense, so use a roomier one for the check
-    bf2, d2 = _front(1 << 16)
+    bf2, d2 = _front(tmp_path, 1 << 16)
     bf2.write(d2, keys)
     other = rng.randint(-(2**62), 2**62, size=20, dtype=np.int64)
     other = np.setdiff1d(other, keys)
@@ -37,8 +39,8 @@ def test_no_false_negatives_and_prunes_disjoint():
     assert not bf2.might_contain_any(d2, np.empty(0, dtype=np.int64))
 
 
-def test_cache_survives_dir_deletion_and_reload_fresh():
-    bf, d = _front()
+def test_cache_survives_dir_deletion_and_reload_fresh(tmp_path):
+    bf, d = _front(tmp_path)
     keys = np.arange(100, dtype=np.int64)
     bf.write(d, keys)
     # a FRESH front (new process) reads the file back identically
@@ -51,22 +53,22 @@ def test_cache_survives_dir_deletion_and_reload_fresh():
     assert bf.might_contain_any(d, np.asarray([5], dtype=np.int64))
 
 
-def test_missing_torn_and_foreign_blooms_are_unprunable():
-    bf, d = _front()
+def test_missing_torn_and_foreign_blooms_are_unprunable(tmp_path):
+    bf, d = _front(tmp_path)
     probe = np.asarray([1, 2, 3], dtype=np.int64)
     # missing file -> must read
     assert bf.might_contain_any(d, probe)
-    bf2, d2 = _front()
+    bf2, d2 = _front(tmp_path)
     (d2 / "_t_bloom.npz").write_bytes(b"torn garbage")
     assert bf2.might_contain_any(d2, probe)
     # foreign geometry (different m) -> must read
-    bf3, d3 = _front(1 << 12)
+    bf3, d3 = _front(tmp_path, 1 << 12)
     BloomFront("_t_bloom.npz", 1 << 13).write(d3, np.asarray([99], dtype=np.int64))
     assert bf3.might_contain_any(d3, probe)
 
 
-def test_union_write_is_exact_or_of_sources():
-    bf, base = _front(1 << 14)
+def test_union_write_is_exact_or_of_sources(tmp_path):
+    bf, base = _front(tmp_path, 1 << 14)
     a, b, out = base / "a", base / "b", base / "out"
     for p in (a, b, out):
         p.mkdir()
@@ -84,7 +86,7 @@ def test_union_write_is_exact_or_of_sources():
     assert not bf.union_write(out, [a, c])
 
 
-def test_probe_reads_only_collision_bearing_dirs(spark, monkeypatch):
+def test_probe_reads_only_collision_bearing_dirs(spark, monkeypatch, tmp_path):
     """Integration: after indexing one batch, a fully-novel batch's
     probe must read (almost) no band version dirs, and a duplicate-
     heavy batch must read them — Bloom pruning at work."""
@@ -92,7 +94,7 @@ def test_probe_reads_only_collision_bearing_dirs(spark, monkeypatch):
     from db_cdc_poc_spark.streaming.state import BucketedStateTable
 
     idx = StreamingDedupIndex(
-        tempfile.mkdtemp(prefix="lshbloom_"), threshold=0.5, num_buckets=8
+        str(tmp_path / "lshbloom"), threshold=0.5, num_buckets=8
     )
     b1 = spark.createDataFrame(
         [(i, f"first batch document {i} talks about completely original topic {i}")

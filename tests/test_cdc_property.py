@@ -83,46 +83,47 @@ def test_changes_since_matches_applied_view_diff(spark, rows, cut):
 
     cut = min(cut, len(rows))
     b1, b2 = rows[:cut], rows[cut:]
-    target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_cs_prop_"),
-        keys="key",
-        sequence_by="seq",
-        apply_as_deletes="op = 'd'",
-        except_columns=["op"],
-        tie_breakers="val",
-        keep_versions=4,
-    )
-    schema = "key long, seq long, op string, val long"
-    wm = None
-    if b1:
-        target.upsert_batch(spark.createDataFrame(b1, schema))
-        wm = target.state.commits()[-1]
-    if b2:
-        target.upsert_batch(spark.createDataFrame(b2, schema))
-    if not b1 and not b2:
-        return
-    if wm is None:
-        # no watermark yet: bootstrap form, everything is a create
-        got = {
-            r.key: (r.op, None, (r.after.seq, r.after.val))
-            for r in target.changes_since(spark, None).collect()
-        }
-    else:
-        got = {
-            r.key: (
-                r.op,
-                (r.before.seq, r.before.val) if r.before else None,
-                (r.after.seq, r.after.val) if r.after else None,
-            )
-            for r in target.changes_since(spark, wm).collect()
-        }
-    old = _model(b1)
-    new = _model(rows)
-    want = {}
-    for k in set(old) | set(new):
-        o, n = old.get(k), new.get(k)
-        if o == n:
-            continue
-        op = "c" if o is None else ("d" if n is None else "u")
-        want[k] = (op, o, n)
-    assert got == want
+    with tempfile.TemporaryDirectory(prefix="cdc_cs_prop_") as state_dir:
+        target = CdcTarget(
+            state_dir,
+            keys="key",
+            sequence_by="seq",
+            apply_as_deletes="op = 'd'",
+            except_columns=["op"],
+            tie_breakers="val",
+            keep_versions=4,
+        )
+        schema = "key long, seq long, op string, val long"
+        wm = None
+        if b1:
+            target.upsert_batch(spark.createDataFrame(b1, schema))
+            wm = target.state.commits()[-1]
+        if b2:
+            target.upsert_batch(spark.createDataFrame(b2, schema))
+        if not b1 and not b2:
+            return
+        if wm is None:
+            # no watermark yet: bootstrap form, everything is a create
+            got = {
+                r.key: (r.op, None, (r.after.seq, r.after.val))
+                for r in target.changes_since(spark, None).collect()
+            }
+        else:
+            got = {
+                r.key: (
+                    r.op,
+                    (r.before.seq, r.before.val) if r.before else None,
+                    (r.after.seq, r.after.val) if r.after else None,
+                )
+                for r in target.changes_since(spark, wm).collect()
+            }
+        old = _model(b1)
+        new = _model(rows)
+        want = {}
+        for k in set(old) | set(new):
+            o, n = old.get(k), new.get(k)
+            if o == n:
+                continue
+            op = "c" if o is None else ("d" if n is None else "u")
+            want[k] = (op, o, n)
+        assert got == want

@@ -191,3 +191,24 @@ def test_semdedup_reliable_matches_local(spark, tmp_path):
     assert reliable == local and len(local) == 2
     # the assignment materialized as a durable parquet step
     assert os.listdir(tmp_path / "sd")
+
+
+# -- bench.py checkpoint GC ----------------------------------------------------
+
+
+def test_bench_ckpt_gc_removes_only_new_entries(tmp_path):
+    import bench
+
+    d = tmp_path / "ckpt"
+    d.mkdir()
+    (d / "pre-existing").mkdir()
+    (d / "pre-existing" / "keep.txt").write_text("x")
+    keep = bench._ckpt_entries(d)
+    (d / "step-abc-000001").mkdir()
+    (d / "step-abc-000001" / "part-0.parquet").write_bytes(b"y" * 1000)
+    freed = bench._ckpt_gc(d, keep)
+    assert freed == 1000
+    assert (d / "pre-existing" / "keep.txt").exists()
+    assert not (d / "step-abc-000001").exists()
+    # no dir configured -> no-op
+    assert bench._ckpt_gc(None, set()) == 0

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from db_cdc_poc_spark.operators import dedup as dd
+from db_cdc_poc_spark.operators.dedup import containment_pairs
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -469,3 +470,58 @@ def test_duplicate_spans_degenerate_docs_vanish(spark):
         "doc_id long, text string",
     )
     assert dd.duplicate_span_stats(weird, window=8).count() == 0
+
+
+# -- containment prefix join: index-side positional bound stays exact ----------
+
+
+def _brute_containment(rows, n, threshold):
+    def shingles(text):
+        toks = [t for t in text.split() if t]
+        return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+    sets = {i: shingles(t) for i, t in rows}
+    out = set()
+    ids = sorted(sets)
+    for i in range(len(ids)):
+        for j in range(i + 1, len(ids)):
+            a, b = sets[ids[i]], sets[ids[j]]
+            common = len(a & b)
+            if common and common / min(len(a), len(b)) >= threshold:
+                out.add((ids[i], ids[j]))
+    return out
+
+
+def test_containment_index_bound_exact_on_hot_boilerplate(spark):
+    """Adversarial shape for the index-side bound: a corpus-hot
+    boilerplate run shared by EVERY doc (the quadratic posting list the
+    bound exists to prune) plus asymmetric containment — a small doc
+    pasted verbatim inside a much larger one (Jaccard tiny, containment
+    1.0). The prefix path must still equal brute force pair-for-pair."""
+    hot = "terms of service apply to all content here"
+    small = "unique payload alpha beta gamma delta epsilon zeta eta theta"
+    texts = []
+    # 40 docs sharing the hot run, each with distinct filler
+    for i in range(40):
+        filler = " ".join(f"w{i}x{j}" for j in range(30))
+        texts.append(f"{hot} {filler}")
+    # the asymmetric pair: small doc + giant doc containing it verbatim
+    giant_filler = " ".join(f"g{j}" for j in range(400))
+    texts.append(small)
+    texts.append(f"{giant_filler} {small} {hot}")
+    rows = list(enumerate(texts))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for threshold in (0.3, 0.8, 1.0):
+        got = {
+            (r.id_a, r.id_b)
+            for r in containment_pairs(
+                df, n=3, threshold=threshold, mode="prefix"
+            ).collect()
+        }
+        assert got == _brute_containment(rows, 3, threshold), threshold
+    # the asymmetric pair itself survives at threshold 1.0
+    got = {
+        (r.id_a, r.id_b)
+        for r in containment_pairs(df, n=3, threshold=1.0, mode="prefix").collect()
+    }
+    assert (40, 41) in got

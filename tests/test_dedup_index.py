@@ -3,7 +3,6 @@ duplicate rejection, append-only state growth."""
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -13,9 +12,9 @@ from db_cdc_poc_spark.streaming.dedup_index import StreamingDedupIndex
 from .conftest import SF_DIR
 
 
-def _index(tmp_suffix: str = "") -> StreamingDedupIndex:
+def _index(tmp_path, tmp_suffix: str = "") -> StreamingDedupIndex:
     return StreamingDedupIndex(
-        tempfile.mkdtemp(prefix=f"lshidx{tmp_suffix}_"),
+        str(tmp_path / f"lshidx{tmp_suffix}"),
         threshold=0.5,
         num_buckets=8,
     )
@@ -29,16 +28,16 @@ def _decide(idx: StreamingDedupIndex, batches) -> dict[int, tuple[bool, int]]:
     return out
 
 
-def test_multi_batch_equals_single_batch(spark):
+def test_multi_batch_equals_single_batch(spark, tmp_path):
     """Cutting the same id-ordered stream into 1 vs 3 micro-batches
     must not change any decision — the invariance the index keeps by
     indexing every seen doc, not just accepted ones."""
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    one = _decide(_index("a"), [docs])
+    one = _decide(_index(tmp_path, "a"), [docs])
     ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
     cuts = [ids[: len(ids) // 3], ids[len(ids) // 3 : 2 * len(ids) // 3], ids[2 * len(ids) // 3 :]]
     three = _decide(
-        _index("b"),
+        _index(tmp_path, "b"),
         [docs.filter(F.col("doc_id").isin(c)) for c in cuts],
     )
     assert one == three
@@ -47,7 +46,7 @@ def test_multi_batch_equals_single_batch(spark):
     assert any(novel for novel, _ in one.values())
 
 
-def test_planted_duplicate_across_batches_rejected(spark):
+def test_planted_duplicate_across_batches_rejected(spark, tmp_path):
     base = "the quick brown fox jumps over the lazy dog again and again today"
     b1 = spark.createDataFrame(
         [(1, base), (2, "completely different first-batch content with many words here")],
@@ -57,25 +56,25 @@ def test_planted_duplicate_across_batches_rejected(spark):
         [(10, base), (11, "novel second-batch document that matches nothing at all")],
         "doc_id long, text string",
     )
-    idx = _index("c")
+    idx = _index(tmp_path, "c")
     first = {r.id: r.is_novel for r in idx.process_batch(b1).collect()}
     second = {r.id: r.is_novel for r in idx.process_batch(b2).collect()}
     assert first == {1: True, 2: True}
     assert second == {10: False, 11: True}
 
 
-def test_within_batch_smaller_id_wins(spark):
+def test_within_batch_smaller_id_wins(spark, tmp_path):
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     b = spark.createDataFrame(
         [(5, base), (3, base), (9, "unrelated text with nothing shared at all whatsoever")],
         "doc_id long, text string",
     )
-    out = {r.id: r.is_novel for r in _index("d").process_batch(b).collect()}
+    out = {r.id: r.is_novel for r in _index(tmp_path, "d").process_batch(b).collect()}
     assert out == {3: True, 5: False, 9: True}
 
 
-def test_index_state_grows_and_probe_stays_keyed(spark):
-    idx = _index("e")
+def test_index_state_grows_and_probe_stays_keyed(spark, tmp_path):
+    idx = _index(tmp_path, "e")
     b1 = spark.createDataFrame(
         [(1, "first document with enough words to shingle properly today")],
         "doc_id long, text string",
@@ -104,7 +103,7 @@ def test_index_state_grows_and_probe_stays_keyed(spark):
     assert idx.compact(spark) == {"bands_buckets": 0, "sig_buckets": 0}
 
 
-def test_string_ids_work(spark):
+def test_string_ids_work(spark, tmp_path):
     """Doc ids need only be orderable — content-hash string ids work."""
     base = "shared sentence with plenty of tokens to shingle and band today"
     b1 = spark.createDataFrame(
@@ -112,14 +111,14 @@ def test_string_ids_work(spark):
         "doc_id string, text string",
     )
     b2 = spark.createDataFrame([("docC", base)], "doc_id string, text string")
-    idx = _index("s")
+    idx = _index(tmp_path, "s")
     first = {r.id: r.is_novel for r in idx.process_batch(b1).collect()}
     second = {r.id: r.is_novel for r in idx.process_batch(b2).collect()}
     assert first == {"docA": True, "docB": True}
     assert second == {"docC": False}
 
 
-def test_decisions_never_materialize_on_driver(spark, monkeypatch):
+def test_decisions_never_materialize_on_driver(spark, monkeypatch, tmp_path):
     """The per-batch decision path must stay distributed: every driver
     collect inside process_batch is batch-bounded routing metadata —
     (bucket, key-hash) pairs for Bloom pruning and bucket routing —
@@ -136,7 +135,7 @@ def test_decisions_never_materialize_on_driver(spark, monkeypatch):
         return rows
 
     monkeypatch.setattr(DataFrame, "collect", spy)
-    idx = _index("m")
+    idx = _index(tmp_path, "m")
     n_docs = 20
     b = spark.createDataFrame(
         [(i, f"document number {i} with enough distinct words to shingle nicely") for i in range(n_docs)],
@@ -176,7 +175,7 @@ def test_index_survives_restart(spark, tmp_path):
     assert out2 == {2: False, 3: True}
 
 
-def test_auto_compaction_cadence_preserves_decisions(spark):
+def test_auto_compaction_cadence_preserves_decisions(spark, tmp_path):
     """compact_every folds the LSM chains mid-stream; decisions and
     state content must be unaffected (same invariance contract as
     batch cutting)."""
@@ -184,7 +183,7 @@ def test_auto_compaction_cadence_preserves_decisions(spark):
     ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
     cuts = [ids[i::4] for i in range(4)]  # 4 batches
     compacting = StreamingDedupIndex(
-        tempfile.mkdtemp(prefix="lshidx_cc_"), threshold=0.5,
+        str(tmp_path / "lshidx_cc"), threshold=0.5,
         num_buckets=8, compact_every=2,
     )
     auto = {}
@@ -195,7 +194,7 @@ def test_auto_compaction_cadence_preserves_decisions(spark):
             auto[r.id] = (r.is_novel, r.n_matches)
     # decisions depend on batch CONTENT order, so compare against a
     # same-cut plain index rather than the different-cut run above
-    plain_idx = _index("nc2")
+    plain_idx = _index(tmp_path, "nc2")
     want = {}
     for c in cuts:
         for r in plain_idx.process_batch(
@@ -207,7 +206,7 @@ def test_auto_compaction_cadence_preserves_decisions(spark):
     assert compacting._batches_since_compact < 4
 
 
-def test_legacy_layout_detected_and_migrated(spark):
+def test_legacy_layout_detected_and_migrated(spark, tmp_path):
     """An index written by the pre-normalization layout (sig column ON
     band rows, no _sigs table) must refuse to probe — silently judging
     every re-sent doc novel is the failure mode — and migrate_legacy
@@ -221,14 +220,14 @@ def test_legacy_layout_detected_and_migrated(spark):
     )
     # steal correctly-shaped band rows from a modern index, then lay
     # them down in the LEGACY shape: sig carried on every band row
-    modern = _index("mig_src")
+    modern = _index(tmp_path, "mig_src")
     modern.process_batch(b1)
     legacy_rows = (
         modern.state.state_for(spark)
         .join(modern.sigs.state_for(spark), "id")
         .select("band_id", "band_hash", "id", "sig")
     )
-    legacy_path = tempfile.mkdtemp(prefix="lshidx_legacy_")
+    legacy_path = str(tmp_path / "lshidx_legacy")
     seed = StreamingDedupIndex(legacy_path, threshold=0.5, num_buckets=8)
     seed.state.append_batch(legacy_rows)
 
@@ -244,18 +243,18 @@ def test_legacy_layout_detected_and_migrated(spark):
     assert "sig" not in reopened.state.state_for(spark).columns
 
 
-def test_bands_without_sigs_raises(spark):
+def test_bands_without_sigs_raises(spark, tmp_path):
     """Band chains with an empty signature table (e.g. the pre-fix
     bands-first crash window) must raise, not silently drop every
     candidate in the inner sig join."""
     import pytest
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
-    src = _index("orphan_src")
+    src = _index(tmp_path, "orphan_src")
     src.process_batch(
         spark.createDataFrame([(1, base)], "doc_id long, text string")
     )
-    path = tempfile.mkdtemp(prefix="lshidx_orphan_")
+    path = str(tmp_path / "lshidx_orphan")
     torn = StreamingDedupIndex(path, threshold=0.5, num_buckets=8)
     torn.state.append_batch(
         src.state.state_for(spark).select("band_id", "band_hash", "id")
@@ -266,7 +265,7 @@ def test_bands_without_sigs_raises(spark):
         )
 
 
-def test_compaction_cadence_survives_restart(spark):
+def test_compaction_cadence_survives_restart(spark, tmp_path):
     """The cadence keys off the DISK delta-chain length, not just the
     in-memory batch counter: a crash-looping ingester restarting every
     few triggers would otherwise defer compaction forever (the counter
@@ -276,7 +275,7 @@ def test_compaction_cadence_survives_restart(spark):
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
     cuts = [ids[i::4] for i in range(4)]
-    path = tempfile.mkdtemp(prefix="lshidx_restart_")
+    path = str(tmp_path / "lshidx_restart")
     # "process 1": compact_every=None -> pure appends, chains grow
     p1 = StreamingDedupIndex(path, threshold=0.5, num_buckets=8, compact_every=None)
     want = {}
@@ -297,7 +296,7 @@ def test_compaction_cadence_survives_restart(spark):
     # to one snapshot plus the new batch's single delta
     assert p2._max_delta_chain() <= 1
     # and decisions match a never-compacted same-cut run
-    plain = _index("restart_plain")
+    plain = _index(tmp_path, "restart_plain")
     got = _decide(
         plain, [docs.filter(F.col("doc_id").isin(sorted(c))) for c in cuts]
     )

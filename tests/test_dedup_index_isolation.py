@@ -22,7 +22,6 @@ monkeypatch pattern of test_round10_fixes.py's crash-window tests.
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -59,12 +58,12 @@ def _reader_matches(spark, path, probe_docs):
 
 def test_reader_between_sigs_and_bands_sees_committed_snapshot(
     spark, monkeypatch
-):
+, tmp_path):
     """Interleave point: batch 2's sigs are committed, its bands are
     not. The reader must (a) still match docs against batch 1 — the
     committed snapshot, (b) see batch 2 as entirely absent (its orphan
     sigs never surface as candidates), (c) raise nothing."""
-    path = tempfile.mkdtemp(prefix="iso_idx_") + "/lsh"
+    path = str(tmp_path / "lsh")
     idx = StreamingDedupIndex(path, threshold=0.5, num_buckets=4, compact_every=None)
     idx.process_batch(_docs(spark, [(1, TEXTS[1]), (2, TEXTS[2])]))
 
@@ -94,11 +93,11 @@ def test_reader_between_sigs_and_bands_sees_committed_snapshot(
     assert after == {201: {2}, 202: {102}, 203: set()}
 
 
-def test_reader_between_band_and_sig_compaction_swaps(spark, monkeypatch):
+def test_reader_between_band_and_sig_compaction_swaps(spark, monkeypatch, tmp_path):
     """Interleave point: the band table's compaction snapshot has
     swapped in, the sig table's has not. Content must be identical to
     the pre-compaction read — compaction is invisible to readers."""
-    path = tempfile.mkdtemp(prefix="iso_cmp_") + "/lsh"
+    path = str(tmp_path / "lsh")
     idx = StreamingDedupIndex(path, threshold=0.5, num_buckets=4, compact_every=None)
     for did, text in TEXTS.items():
         idx.process_batch(_docs(spark, [(did, text)]))
@@ -129,11 +128,11 @@ def test_reader_between_band_and_sig_compaction_swaps(spark, monkeypatch):
     assert _reader_matches(spark, path, probe) == before
 
 
-def test_reader_mid_append_never_sees_bandrow_without_sig(spark, monkeypatch):
+def test_reader_mid_append_never_sees_bandrow_without_sig(spark, monkeypatch, tmp_path):
     """The invariant behind both windows, asserted directly at the
     interleave instant: every band row's id resolves to a committed
     sig row (orphans only ever point the OTHER way)."""
-    path = tempfile.mkdtemp(prefix="iso_inv_") + "/lsh"
+    path = str(tmp_path / "lsh")
     idx = StreamingDedupIndex(path, threshold=0.5, num_buckets=4, compact_every=None)
     idx.process_batch(_docs(spark, [(1, TEXTS[1])]))
 
@@ -163,13 +162,13 @@ def test_reader_mid_append_never_sees_bandrow_without_sig(spark, monkeypatch):
     }
 
 
-def test_reader_sees_no_partial_batch_even_across_buckets(spark, monkeypatch):
+def test_reader_sees_no_partial_batch_even_across_buckets(spark, monkeypatch, tmp_path):
     """A batch's band rows span several buckets; append_batch commits
     per bucket-version dir. A reader interleaved after the FIRST
     bucket's rename sees only whole committed version dirs — and any
     partially-visible batch can only mean extra MATCHES later, never a
     phantom candidate with no sig (sigs committed first)."""
-    path = tempfile.mkdtemp(prefix="iso_part_") + "/lsh"
+    path = str(tmp_path / "lsh")
     idx = StreamingDedupIndex(path, threshold=0.5, num_buckets=4, compact_every=None)
     idx.process_batch(_docs(spark, [(1, TEXTS[1])]))
 

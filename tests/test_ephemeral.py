@@ -3,8 +3,9 @@
 Ephemeral scratch is guarded: a RAM-backed base is only chosen with
 free-space headroom (falls back to the disk tempdir otherwise), dirs
 are tracked, and ``discard_ephemeral_dir`` releases them eagerly.
-Every drain releases its throwaway checkpoint when it returns, a
-caller-given checkpoint survives, and a memory-sink drain's state width
+Every drain releases its throwaway checkpoint when it returns, the CDC
+and gold drains release their default state tables once the result is
+pinned, a caller-given checkpoint survives, and a memory-sink drain's state width
 scales with the size of the directory it reads.
 """
 
@@ -69,8 +70,15 @@ def scratch(tmp_path, monkeypatch):
     return base
 
 
-def _checkpoints(base) -> list[str]:
-    return sorted(p.name for p in base.iterdir() if p.name.startswith("ckpt_"))
+#: Scratch a returned call must not leave behind: drain checkpoints and
+#: the default (``state_path=None``) CDC and gold state tables.
+_SCRATCH_PREFIXES = ("ckpt_", "cdc_state_", "gold_state_")
+
+
+def _leftovers(base) -> list[str]:
+    return sorted(
+        p.name for p in base.iterdir() if p.name.startswith(_SCRATCH_PREFIXES)
+    )
 
 
 T0 = dt.datetime(2024, 1, 1)
@@ -107,7 +115,7 @@ def test_memory_drain_releases_checkpoint(spark, scratch, tmp_path):
     assert sorted(tuple(r) for r in keys.collect()) == [
         (1, 10, 1), (1, 10, 2), (1, 11, 3), (2, 10, 4), (2, 10, 5), (3, 12, 6)
     ]
-    assert _checkpoints(scratch) == []
+    assert _leftovers(scratch) == []
     # the drain's scaled width is scoped to the drain
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
@@ -118,7 +126,7 @@ def test_fanout_releases_checkpoint(spark, scratch, tmp_path):
     sink = str(tmp_path / "sink")
     stream_fanout(spark, src, [sink])
     assert spark.read.parquet(sink).count() == 7
-    assert _checkpoints(scratch) == []
+    assert _leftovers(scratch) == []
 
 
 def test_gold_drain_releases_checkpoint(spark, scratch, tmp_path):
@@ -138,7 +146,7 @@ def test_gold_drain_releases_checkpoint(spark, scratch, tmp_path):
     # is deduped silver; (2, 10) ignores the change before its snapshot;
     # (3, 12) has no snapshot row
     assert got == {(1, 10): 101, (1, 11): 57, (2, 10): 21}
-    assert _checkpoints(scratch) == []
+    assert _leftovers(scratch) == []
 
 
 def test_cdc_drain_releases_only_throwaway_checkpoint(spark, scratch, tmp_path):
@@ -148,7 +156,7 @@ def test_cdc_drain_releases_only_throwaway_checkpoint(spark, scratch, tmp_path):
         spark, src, keys=["store_id", "item_id"], sequence_by="seq"
     )
     assert applied.count() == 4
-    assert _checkpoints(scratch) == []
+    assert _leftovers(scratch) == []
 
     durable = tmp_path / "durable_ckpt"
     stream_apply_changes(
@@ -161,7 +169,7 @@ def test_cdc_drain_releases_only_throwaway_checkpoint(spark, scratch, tmp_path):
     )
     assert (durable / "commits").is_dir()
     assert any((durable / "commits").iterdir())
-    assert _checkpoints(scratch) == []
+    assert _leftovers(scratch) == []
 
 
 # -- width rule ---------------------------------------------------------------

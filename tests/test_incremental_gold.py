@@ -5,7 +5,6 @@ into micro-batches."""
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -20,12 +19,12 @@ def _normalized(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_incremental_gold_matches_batch_recompute_across_batches(spark):
+def test_incremental_gold_matches_batch_recompute_across_batches(spark, tmp_path):
     reg = build_inventory_pipeline(spark)
     want = _normalized(reg.build("inventory_current"))
     assert len(want) == 1998
 
-    changes_dir = tempfile.mkdtemp(prefix="gold_changes_") + "/changes"
+    changes_dir = str(tmp_path / "changes")
     corrected_changes(reg).repartition(3).write.parquet(changes_dir)
     got = _normalized(
         stream_gold_inventory(
@@ -38,14 +37,14 @@ def test_incremental_gold_matches_batch_recompute_across_batches(spark):
     assert got == want
 
 
-def test_incremental_gold_ignores_pre_snapshot_and_unknown_keys(spark):
+def test_incremental_gold_ignores_pre_snapshot_and_unknown_keys(spark, tmp_path):
     snap = spark.createDataFrame(
         [(1, 10, 100, "2024-01-01 12:00:00")],
         "store_id int, item_id int, quantity int, ts string",
     ).select(
         "store_id", "item_id", "quantity", F.to_timestamp("ts").alias("date_time_ts")
     )
-    gold = IncrementalGold(tempfile.mkdtemp(prefix="gold_inc_"), snap)
+    gold = IncrementalGold(str(tmp_path), snap)
     batch = spark.createDataFrame(
         [
             (1, 10, "2024-01-01 11:00:00", -5),   # before snapshot: ignored

@@ -6,8 +6,6 @@ sources/kafka.py promise, not just their spelling."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from db_cdc_poc_spark.sources.kafka_wire import (
@@ -23,7 +21,8 @@ def _recs(n, start=0, part=0):
 
 def _drain(spark, path, collected, **opts):
     """Run the stream with foreachBatch until idle; collected gets one
-    (epoch, sorted rows) entry per non-empty micro-batch."""
+    (epoch, sorted rows) entry per non-empty micro-batch. The
+    checkpoint sits beside the log dir."""
     register(spark)
     reader = spark.readStream.format("kafka_wire").option("path", path)
     for k, v in opts.items():
@@ -41,9 +40,7 @@ def _drain(spark, path, collected, **opts):
         reader.load()
         .writeStream.foreachBatch(sink)
         .trigger(processingTime="50 milliseconds")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_wire_")
-        )
+        .option("checkpointLocation", f"{path}_ckpt")
         .start()
     )
     try:
@@ -53,8 +50,8 @@ def _drain(spark, path, collected, **opts):
     return q
 
 
-def test_starting_offsets_earliest_reads_history(spark):
-    path = tempfile.mkdtemp(prefix="wire_e_")
+def test_starting_offsets_earliest_reads_history(spark, tmp_path):
+    path = str(tmp_path / "wire_e")
     append_records(path, 0, _recs(5))
     got: list = []
     _drain(spark, path, got, startingOffsets="earliest")
@@ -65,16 +62,16 @@ def test_starting_offsets_earliest_reads_history(spark):
     assert {r[4] for r in rows} == {path.rsplit("/", 1)[-1]}
 
 
-def test_starting_offsets_latest_skips_history(spark):
-    path = tempfile.mkdtemp(prefix="wire_l_")
+def test_starting_offsets_latest_skips_history(spark, tmp_path):
+    path = str(tmp_path / "wire_l")
     append_records(path, 0, _recs(5))
     got: list = []
     _drain(spark, path, got, startingOffsets="latest")
     assert got == []  # pre-start records never read
 
 
-def test_starting_offsets_explicit_json(spark):
-    path = tempfile.mkdtemp(prefix="wire_j_")
+def test_starting_offsets_explicit_json(spark, tmp_path):
+    path = str(tmp_path / "wire_j")
     append_records(path, 0, _recs(6))
     append_records(path, 1, _recs(4, part=1))
     got: list = []
@@ -86,12 +83,12 @@ def test_starting_offsets_explicit_json(spark):
     ]
 
 
-def test_max_offsets_per_trigger_proportional_split(spark):
+def test_max_offsets_per_trigger_proportional_split(spark, tmp_path):
     """Cap 6 against lags (8, 4): batch 1 takes floor(8*6/12)=4 from
     p0 and floor(4*6/12)=2 from p1; the remaining lag (4, 2) fits the
     cap, so batch 2 drains it — the Kafka connector's proportional
     rate-limit shape, observed at real micro-batch boundaries."""
-    path = tempfile.mkdtemp(prefix="wire_m_")
+    path = str(tmp_path / "wire_m")
     append_records(path, 0, _recs(8))
     append_records(path, 1, _recs(4, part=1))
     got: list = []
@@ -108,8 +105,8 @@ def test_max_offsets_per_trigger_proportional_split(spark):
     ]
 
 
-def test_fail_on_data_loss_false_skips_to_earliest(spark):
-    path = tempfile.mkdtemp(prefix="wire_s_")
+def test_fail_on_data_loss_false_skips_to_earliest(spark, tmp_path):
+    path = str(tmp_path / "wire_s")
     append_records(path, 0, _recs(3))          # segment [0, 3)
     append_records(path, 0, _recs(3, start=3))  # segment [3, 6)
     assert prune_segments(path, 0, upto=3) == 1  # retention drops [0,3)
@@ -122,8 +119,8 @@ def test_fail_on_data_loss_false_skips_to_earliest(spark):
     assert rows == [3, 4, 5]  # skipped the pruned range, no crash
 
 
-def test_fail_on_data_loss_true_aborts(spark):
-    path = tempfile.mkdtemp(prefix="wire_f_")
+def test_fail_on_data_loss_true_aborts(spark, tmp_path):
+    path = str(tmp_path / "wire_f")
     append_records(path, 0, _recs(3))
     append_records(path, 0, _recs(3, start=3))
     prune_segments(path, 0, upto=3)
@@ -137,12 +134,12 @@ def test_fail_on_data_loss_true_aborts(spark):
     assert got == []
 
 
-def test_restart_resumes_from_checkpoint_exactly_once(spark):
+def test_restart_resumes_from_checkpoint_exactly_once(spark, tmp_path):
     """T6 over the wire shape: stop, append more, restart on the SAME
     checkpoint — the resumed stream reads only the new offsets."""
     register(spark)
-    path = tempfile.mkdtemp(prefix="wire_r_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_wire_r_")
+    path = str(tmp_path / "wire_r")
+    ckpt = str(tmp_path / "ckpt_wire_r")
     append_records(path, 0, _recs(4))
     seen: list = []
 

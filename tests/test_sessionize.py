@@ -5,7 +5,6 @@ user's events arrive across micro-batches in chronological order."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -37,7 +36,7 @@ def test_sessionize_known_gaps(spark):
     assert summary == {(1, 1): 2, (1, 2): 1, (2, 1): 1}
 
 
-def _stage_chronological(spark):
+def _stage_chronological(spark, base: str):
     """events staged as 3 time-ordered files (mtime-forced order)."""
     ev = load_table(spark, SF_DIR, "events").select("user_id", "event_id", "ts")
     # stage 3 files split at global time boundaries; force mtime order so
@@ -45,7 +44,6 @@ def _stage_chronological(spark):
     lo, hi = ev.selectExpr(
         "percentile(unix_micros(ts), 0.33)", "percentile(unix_micros(ts), 0.66)"
     ).collect()[0]
-    base = tempfile.mkdtemp(prefix="sess_stream_")
     root = f"{base}/events"
     os.makedirs(root)
     parts = [
@@ -65,8 +63,8 @@ def _stage_chronological(spark):
     return root, files
 
 
-def _assert_stream_matches_batch(spark, stream_fn):
-    root, files = _stage_chronological(spark)
+def _assert_stream_matches_batch(spark, stream_fn, base: str):
+    root, files = _stage_chronological(spark, base)
     got = {
         (r.user_id, r.event_id): r.session_seq
         for r in stream_fn(
@@ -83,8 +81,8 @@ def _assert_stream_matches_batch(spark, stream_fn):
     assert got == want
 
 
-def test_stream_sessionize_matches_batch_across_chronological_batches(spark):
-    _assert_stream_matches_batch(spark, stream_sessionize)
+def test_stream_sessionize_matches_batch_across_chronological_batches(spark, tmp_path):
+    _assert_stream_matches_batch(spark, stream_sessionize, str(tmp_path))
 
 
 def test_sessionize_invariants_property(spark):

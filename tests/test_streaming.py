@@ -4,8 +4,6 @@ input is split across multiple micro-batches."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,9 +19,9 @@ from .conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
-def events_dir(spark):
+def events_dir(spark, tmp_path_factory):
     """events table staged as 4 parquet files (micros timestamps)."""
-    out = tempfile.mkdtemp(prefix="events_multi_") + "/events"
+    out = str(tmp_path_factory.mktemp("events_multi") / "events")
     load_table(spark, SF_DIR, "events").repartition(4).write.parquet(out)
     return out
 
@@ -94,9 +92,9 @@ def test_stream_cdc_apply_multi_batch_parity(spark, events_dir):
     assert sorted(map(tuple, batch.collect())) == sorted(map(tuple, streamed.collect()))
 
 
-def test_cdc_target_delete_then_reinsert_across_batches(spark):
+def test_cdc_target_delete_then_reinsert_across_batches(spark, tmp_path):
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_t_"),
+        str(tmp_path),
         keys="k", sequence_by="seq", apply_as_deletes="op = 'd'",
         except_columns=["op", "seq"],
     )
@@ -115,9 +113,9 @@ def test_cdc_target_delete_then_reinsert_across_batches(spark):
     assert end == {(1, "c"), (2, "b")}  # reinsert after delete survives
 
 
-def test_cdc_target_stale_update_across_batches_ignored(spark):
+def test_cdc_target_stale_update_across_batches_ignored(spark, tmp_path):
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_t2_"),
+        str(tmp_path),
         keys="k", sequence_by="seq", except_columns=["seq"],
     )
     target.upsert_batch(
@@ -130,13 +128,13 @@ def test_cdc_target_stale_update_across_batches_ignored(spark):
     assert r.v == "new"
 
 
-def test_cdc_target_untouched_buckets_not_rewritten(spark):
+def test_cdc_target_untouched_buckets_not_rewritten(spark, tmp_path):
     # scale contract: a micro-batch must rewrite ONLY the bucket chains
     # its keys hash into — every other bucket's files stay byte-identical
     import hashlib
     from pathlib import Path
 
-    root = tempfile.mkdtemp(prefix="cdc_bkt_")
+    root = str(tmp_path)
     target = CdcTarget(root, keys="k", sequence_by="seq", num_buckets=8)
     b1 = spark.createDataFrame(
         [(i, f"v{i}", 10) for i in range(50)], "k long, v string, seq long"
@@ -377,12 +375,10 @@ def test_streaming_state_on_rocksdb_matches_default_store(spark, events_dir):
     assert rocks == default
 
 
-def test_stream_fanout_writes_identical_sinks_across_batches(spark, events_dir):
-    import tempfile as _tf
-
+def test_stream_fanout_writes_identical_sinks_across_batches(spark, events_dir, tmp_path):
     from db_cdc_poc_spark.streaming.jobs import stream_fanout
 
-    base = _tf.mkdtemp(prefix="fanout_t_")
+    base = str(tmp_path)
     sinks = [f"{base}/a", f"{base}/b"]
     # 1 file per trigger -> 4 micro-batches, each fanned to both sinks
     stream_fanout(spark, events_dir, sinks, max_files_per_trigger=1)
@@ -397,11 +393,11 @@ def test_stream_fanout_writes_identical_sinks_across_batches(spark, events_dir):
     assert a.select("batch_id").distinct().count() == 4
 
 
-def test_state_table_time_travel_reconstructs_each_commit(spark):
+def test_state_table_time_travel_reconstructs_each_commit(spark, tmp_path):
     # every merge_batch records a table-wide commit snapshot; state_at
     # must reproduce the table exactly as it stood after each batch
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_tt_"),
+        str(tmp_path),
         keys="k", sequence_by="seq", num_buckets=4, keep_versions=100,
     )
     snapshots = []
@@ -421,11 +417,11 @@ def test_state_table_time_travel_reconstructs_each_commit(spark):
         assert got == want, f"commit {commit}"
 
 
-def test_state_table_time_travel_vacuumed_version_raises(spark):
+def test_state_table_time_travel_vacuumed_version_raises(spark, tmp_path):
     from db_cdc_poc_spark.streaming.state import StateVersionVacuumedError
 
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_vac_"),
+        str(tmp_path),
         keys="k", sequence_by="seq", num_buckets=1, keep_versions=1,
     )
     for seq in (10, 20, 30):
@@ -441,13 +437,11 @@ def test_state_table_time_travel_vacuumed_version_raises(spark):
     assert r.v == "v30"
 
 
-def test_state_diff_classifies_changes_between_commits(spark):
-    import tempfile
-
+def test_state_diff_classifies_changes_between_commits(spark, tmp_path):
     from db_cdc_poc_spark.streaming.cdc import CdcTarget, state_diff
 
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_diff_"),
+        str(tmp_path),
         keys="k", sequence_by="seq", apply_as_deletes="op = 'd'",
         except_columns=["op", "seq"], keep_versions=6,
     )
@@ -504,13 +498,11 @@ def test_stream_session_window_equals_batch(spark):
     assert len(streamed) > 0
 
 
-def test_state_diff_sees_changes_in_evolved_columns(spark):
-    import tempfile
-
+def test_state_diff_sees_changes_in_evolved_columns(spark, tmp_path):
     from db_cdc_poc_spark.streaming.cdc import CdcTarget, state_diff
 
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_diff_evo_"),
+        str(tmp_path),
         keys="k", sequence_by="seq", except_columns=["seq"], keep_versions=6,
     )
     target.upsert_batch(spark.createDataFrame(
@@ -526,17 +518,17 @@ def test_state_diff_sees_changes_in_evolved_columns(spark):
     assert diff == {1: "changed"}
 
 
-def test_state_table_append_batch_equals_union_merge(spark):
+def test_state_table_append_batch_equals_union_merge(spark, tmp_path):
     """append_batch (LSM delta versions, O(batch) writes) must be
     READ-identical to merge_batch with a union-all merge — same rows,
     same time travel — while writing only the batch per trigger."""
     from db_cdc_poc_spark.streaming.state import BucketedStateTable
 
     appended = BucketedStateTable(
-        tempfile.mkdtemp(prefix="st_app_"), keys=["k"], num_buckets=4
+        str(tmp_path / "app"), keys=["k"], num_buckets=4
     )
     merged = BucketedStateTable(
-        tempfile.mkdtemp(prefix="st_mrg_"), keys=["k"], num_buckets=4
+        str(tmp_path / "mrg"), keys=["k"], num_buckets=4
     )
     batches = [
         [(i, f"v{i}") for i in range(0, 40)],
@@ -573,14 +565,14 @@ def test_state_table_append_batch_equals_union_merge(spark):
         assert len(appended._chain_dirs(b)) == 1
 
 
-def test_state_table_append_then_merge_interleave(spark):
+def test_state_table_append_then_merge_interleave(spark, tmp_path):
     """A merge_batch AFTER appends must see the full delta chain as
     its state input (the CDC-on-top-of-appends composition)."""
     from db_cdc_poc_spark.operators.cdc import latest_by_key
     from db_cdc_poc_spark.streaming.state import BucketedStateTable
 
     t = BucketedStateTable(
-        tempfile.mkdtemp(prefix="st_mix_"), keys=["k"], num_buckets=2
+        str(tmp_path), keys=["k"], num_buckets=2
     )
     t.append_batch(spark.createDataFrame([(1, "a", 10), (2, "b", 10)], "k long, v string, seq long"))
     t.append_batch(spark.createDataFrame([(1, "a2", 20)], "k long, v string, seq long"))
@@ -601,11 +593,11 @@ def test_state_table_append_then_merge_interleave(spark):
     assert got == [(1, "a2"), (2, "b"), (3, "c")]
 
 
-def test_cdc_changes_since_classifies_c_u_d(spark):
+def test_cdc_changes_since_classifies_c_u_d(spark, tmp_path):
     """changes_since(commit) is the applied-state delta: creates,
     payload updates, applied deletes; unchanged keys yield NO row."""
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_cs_"),
+        str(tmp_path),
         keys="k", sequence_by="seq", apply_as_deletes="op = 'd'",
         except_columns=["op", "seq"], keep_versions=4,
     )
@@ -635,12 +627,12 @@ def test_cdc_changes_since_classifies_c_u_d(spark):
     }
 
 
-def test_cdc_changes_since_replay_yields_empty_delta(spark):
+def test_cdc_changes_since_replay_yields_empty_delta(spark, tmp_path):
     """A re-fired trigger re-upserting the same rows must produce an
     EMPTY delta against the post-commit watermark — the exactly-once
     property the crash soak's gold fold relies on."""
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_cs_r_"),
+        str(tmp_path),
         keys="k", sequence_by="seq", keep_versions=4,
     )
     b = spark.createDataFrame([(1, "a", 10), (2, "b", 10)],
@@ -651,9 +643,9 @@ def test_cdc_changes_since_replay_yields_empty_delta(spark):
     assert target.changes_since(spark, wm).count() == 0
 
 
-def test_cdc_changes_since_keys_filter_prunes(spark):
+def test_cdc_changes_since_keys_filter_prunes(spark, tmp_path):
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_cs_k_"),
+        str(tmp_path),
         keys="k", sequence_by="seq", keep_versions=4,
     )
     target.upsert_batch(
@@ -668,3 +660,21 @@ def test_cdc_changes_since_keys_filter_prunes(spark):
     keys = spark.createDataFrame([(1,)], "k long")
     got = {(r.k, r.op) for r in target.changes_since(spark, wm, keys).collect()}
     assert got == {(1, "u")}
+
+
+# -- state-table writer lease --------------------------------------------------
+
+
+def test_sequential_state_table_writers_unaffected(spark, tmp_path):
+    """Per-mutation transient acquire/release: sequential instances and
+    re-fires never block (the soak pattern)."""
+    from db_cdc_poc_spark.streaming.state import BucketedStateTable
+
+    t1 = BucketedStateTable(str(tmp_path / "st"), keys=["k"], num_buckets=4)
+    t1.merge_batch(
+        spark.createDataFrame([(1, "a")], "k long, v string"), lambda s, b: b
+    )
+    t2 = BucketedStateTable(str(tmp_path / "st"), keys=["k"], num_buckets=4)
+    t2.append_batch(spark.createDataFrame([(2, "b")], "k long, v string"))
+    assert t2.snapshot(spark) >= 1
+    assert t2.state_for(spark).count() == 2
