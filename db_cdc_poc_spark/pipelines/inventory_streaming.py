@@ -7,6 +7,9 @@ in when a broker exists).
     cdc topic files    ─► parse Debezium ─► foreachBatch CDC apply ─► keyed state
     silver + dims      ─► gold recompute (pipelines/inventory.py shape)
 
+Both topic legs run as one drain on the engine's drain core
+(streaming/ephemeral.py): a failure in one stops the other.
+
 Watermark default is 14 hours, NOT the reference's 1 hour: the BOPIS
 duplicate pairs arrive 2-13.7 h apart in event time (SURVEY §2.9 T1),
 so a 1-hour watermark lets streaming dedup state expire before the
@@ -17,16 +20,14 @@ documented lag. Callers can pass '1 hour' for strict reference parity.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from db_cdc_poc_spark.operators.envelopes import (
     parse_cdc_envelope,
     parse_transaction_events,
 )
 from db_cdc_poc_spark.streaming.cdc import CdcTarget
+from db_cdc_poc_spark.streaming.ephemeral import Leg, drain
 
 #: See module docstring — covers the verified 13.7 h max BOPIS lag.
 DEFAULT_DEDUP_WATERMARK = "14 hours"
@@ -69,50 +70,45 @@ def run_ingestion(
     spark: SparkSession,
     events_path: str,
     cdc_path: str,
-    out_root: str | None = None,
+    out_root: str,
     watermark: str = DEFAULT_DEDUP_WATERMARK,
     max_files_per_trigger: int | None = None,
 ) -> dict[str, DataFrame]:
-    """Drain both topics with availableNow triggers and return the
-    resulting silver tables as batch DataFrames:
-    inventory_change (parquet sink) and inventory_snapshot (CDC-applied
-    keyed state, reference 03:318-326).
+    """Drain both topics as one two-leg ``ephemeral.drain`` and return
+    the silver tables as batch DataFrames: inventory_change (parquet
+    sink) and inventory_snapshot (CDC-applied keyed state, reference
+    03:318-326). Sinks, state and checkpoints live under ``out_root``,
+    so a second call on the same root resumes where the first stopped.
     """
-    root = out_root or tempfile.mkdtemp(prefix="pos_stream_")
-
-    change_sink = f"{root}/inventory_change"
-    q1 = (
-        inventory_change_stream(
-            spark, events_path, watermark, max_files_per_trigger
-        )
-        .writeStream.format("parquet")
-        .option("path", change_sink)
-        .option("checkpointLocation", f"{root}/ckpt_change")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
+    change_sink = f"{out_root}/inventory_change"
     target = CdcTarget(
-        f"{root}/inventory_snapshot_state",
+        f"{out_root}/inventory_snapshot_state",
         keys=["item_id", "store_id"],
         sequence_by="ts_ms",
         apply_as_deletes="op = 'd'",
         except_columns=["op", "ts_ms", "date_time"],
     )
+    events = inventory_change_stream(
+        spark, events_path, watermark, max_files_per_trigger
+    )
     cdc_raw = read_topic_files(
         spark, cdc_path, with_key=True, max_files_per_trigger=max_files_per_trigger
     )
-    q2 = (
-        parse_cdc_envelope(cdc_raw)
-        .writeStream.foreachBatch(lambda batch, epoch: target.upsert_batch(batch, epoch))
-        .option("checkpointLocation", f"{root}/ckpt_cdc")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        Leg(
+            "change",
+            events,
+            lambda w: w.format("parquet").option("path", change_sink)
+            .outputMode("append"),
+            f"{out_root}/ckpt_change",
+        ),
+        Leg(
+            "cdc",
+            parse_cdc_envelope(cdc_raw),
+            lambda w: w.foreachBatch(target.upsert_batch),
+            f"{out_root}/ckpt_cdc",
+        ),
     )
-    q1.awaitTermination()
-    q2.awaitTermination()
-
     return {
         "inventory_change": spark.read.parquet(change_sink),
         "inventory_snapshot": target.current(spark),

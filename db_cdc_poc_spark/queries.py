@@ -977,7 +977,6 @@ def _staged_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> st
     directory is read-only input shared by every streaming query
     (q30/q31/q47/q48), so one write serves them all."""
     import os
-    import tempfile
 
     from db_cdc_poc_spark.streaming.ephemeral import ephemeral_checkpoint_dir
 
@@ -1422,8 +1421,7 @@ def q42_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed foreachBatch accumulator. The final state must equal the
     one-shot batch aggregate — which is exactly what the oracle
     computes (q11's shape in integer cents)."""
-    import tempfile
-
+    from db_cdc_poc_spark.streaming.ephemeral import ephemeral_checkpoint_dir
     from db_cdc_poc_spark.streaming.gold import stream_gold_inventory
 
     ev = _t(spark, sf_dir, "events")
@@ -1439,7 +1437,7 @@ def q42_incremental_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = ev.filter(F.col("event_type").isin("click", "purchase")).select(
         "user_id", F.col("ts").alias("date_time"), cents.alias("quantity")
     )
-    changes_dir = tempfile.mkdtemp(prefix="gold_changes_") + "/changes"
+    changes_dir = ephemeral_checkpoint_dir("gold_changes_") + "/changes"
     changes.repartition(3).write.mode("overwrite").parquet(changes_dir)
     return stream_gold_inventory(
         spark,
@@ -3405,11 +3403,10 @@ def q95_stream_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     its row set must equal the source, which is what the oracle
     checks; sink-A/sink-B equality and multi-batch behavior are
     asserted in tests."""
-    import tempfile as _tf
-
+    from db_cdc_poc_spark.streaming.ephemeral import ephemeral_checkpoint_dir
     from db_cdc_poc_spark.streaming.jobs import stream_fanout
 
-    base = _tf.mkdtemp(prefix="fanout_q95_")
+    base = ephemeral_checkpoint_dir("fanout_q95_")
     sinks = [f"{base}/a", f"{base}/b"]
     stream_fanout(spark, _staged_events_dir(spark, sf_dir), sinks)
     return spark.read.parquet(sinks[1]).select("event_id", "user_id", "event_type")
@@ -5241,9 +5238,8 @@ def q136_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks every row against the ORIGINAL table), only the layout
     changes; file-count and clustering assertions live in
     test_layout.py."""
-    import tempfile
-
     from db_cdc_poc_spark.operators.layout import compact_parquet
+    from db_cdc_poc_spark.streaming.ephemeral import ephemeral_checkpoint_dir
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
@@ -5252,7 +5248,7 @@ def q136_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("us"),
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
     )
-    scratch = tempfile.mkdtemp(prefix="q136_")
+    scratch = ephemeral_checkpoint_dir("q136_")
     ev.repartition(64).write.mode("overwrite").parquet(f"{scratch}/small")
     compact_parquet(
         spark,
@@ -5496,8 +5492,6 @@ def q141_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema; the oracle checks every row against the ORIGINAL table, so
     the writer/scanner pair round-trips value-exactly. The corrupt-line
     quarantine path stays covered in test_envelopes.py."""
-    import tempfile
-
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -5506,6 +5500,7 @@ def q141_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from db_cdc_poc_spark.sources.files import read_json_permissive, split_corrupt
+    from db_cdc_poc_spark.streaming.ephemeral import ephemeral_checkpoint_dir
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
@@ -5514,7 +5509,7 @@ def q141_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("us"),
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
     )
-    scratch = tempfile.mkdtemp(prefix="q141_")
+    scratch = ephemeral_checkpoint_dir("q141_")
     ev.write.mode("overwrite").json(f"{scratch}/events_jsonl")
     schema = StructType(
         [
@@ -7634,13 +7629,12 @@ def q171_cdc_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on the key, no driver traffic; pass ``keys_filter`` (the
     trigger's batch keys, broadcast) to make it batch-bounded in the
     per-trigger fold path."""
-    import tempfile
-
     from db_cdc_poc_spark.streaming.cdc import CdcTarget
+    from db_cdc_poc_spark.streaming.ephemeral import ephemeral_checkpoint_dir
 
     ev = _t(spark, sf_dir, "events")
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_changelog_"),
+        ephemeral_checkpoint_dir("cdc_changelog_"),
         keys="user_id",
         sequence_by="ts",
         apply_as_deletes="event_type = 'error'",
@@ -7693,10 +7687,13 @@ def q172_kafka_wire_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     per Kafka partition per micro-batch — a 1000-executor cluster fans
     out like the real connector); the 500-row head is a fixed
     parameter, never a corpus fraction."""
-    import tempfile
     import uuid
 
     from db_cdc_poc_spark.sources.kafka_wire import append_records, register
+    from db_cdc_poc_spark.streaming.ephemeral import (
+        discard_ephemeral_dir,
+        ephemeral_checkpoint_dir,
+    )
 
     ev = _t(spark, sf_dir, "events")
     head = (
@@ -7705,7 +7702,7 @@ def q172_kafka_wire_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(500)
         .collect()  # parameter-bounded: fixed 500-row head
     )
-    log = tempfile.mkdtemp(prefix="kwire_q172_")
+    log = ephemeral_checkpoint_dir("kwire_q172_")
     by_p: dict[int, list] = {}
     for r in head:
         by_p.setdefault(int(r.user_id) % 4, []).append(
@@ -7715,11 +7712,6 @@ def q172_kafka_wire_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_records(log, p, recs)
     register(spark)
     sink = f"q172_sink_{uuid.uuid4().hex[:8]}"
-    from db_cdc_poc_spark.streaming.ephemeral import (
-        discard_ephemeral_dir,
-        ephemeral_checkpoint_dir,
-    )
-
     checkpoint = ephemeral_checkpoint_dir("ckpt_q172_")
     q = (
         spark.readStream.format("kafka_wire")

@@ -1,22 +1,24 @@
 """The engine's one synchronous streaming drain, and its scratch.
 
-Every file-stream job in ``streaming/`` runs the same way: read a
-parquet directory as a file stream (:func:`_read_parquet_stream`),
-build the streaming frame, and drain it with an ``availableNow``
-trigger — start, await, return (:func:`_drain`). Two entry points
-differ only in the sink:
+Every ``availableNow`` query in the package starts and is awaited in
+:func:`drain`: it starts a set of :class:`Leg` s, one query each, then
+awaits them all; if one raises, it stops the others before
+re-raising. ``run_ingestion`` drains its two durable legs through it.
+Two entry points read a parquet directory as a file stream
+(:func:`_read_parquet_stream`) and drain it as one leg, differing
+only in the sink:
 
 * :func:`drain_to_memory` — memory sink; returns the sink table as a
   batch DataFrame (dedup, windows, sessions, joins, enrichment);
 * :func:`drain_foreach_batch` — ``foreachBatch`` sink; the caller's
   function owns the result (fanout, incremental gold, CDC apply).
 
-Checkpoint. A drain's checkpoint is throwaway scratch from
+Checkpoint. A leg's checkpoint is throwaway scratch from
 :func:`ephemeral_checkpoint_dir`, released in ``finally`` when the
 drain returns — the sink already holds the rows and nothing resumes.
-Only a ``foreachBatch`` drain may instead be given a durable
-``checkpoint_path`` (the resumable CDC apply): that one is never
-released and keeps every session default.
+A leg may instead be given a durable ``checkpoint_path`` (the
+resumable CDC apply, ``run_ingestion``): that one is never released
+and keeps every session default.
 
 Checksum sidecars. Spark 4.1 writes a checksum sidecar for every
 streaming-checkpoint file
@@ -29,10 +31,10 @@ integrity check is worth its cost; for a throwaway drain checkpoint it
 buys nothing and measured ~1.8x on the whole drain (5.2s → 2.9s for
 the sf0.1 events dedup drain at 32 state partitions; the per-task wait
 is ~1.4s of pure parking). :func:`_drain_confs` scopes the opt-out
-to the drain: the conf is read at STREAM START, so setting it around
-start()/awaitTermination and restoring afterwards leaves durable
-checkpoints on the safe default. Sessions older than Spark 4.1 simply
-carry an unused conf key.
+to each throwaway leg's ``start()``: a query snapshots the session
+confs when it starts, so durable legs, started outside the scope,
+stay on the safe default. Sessions older than Spark 4.1 simply carry
+an unused conf key.
 
 Width rule, taken from the sink type. A memory-sink drain runs its
 state/shuffle partitions at ``clamp(ceil(bytes / 256 KB), 1, session
@@ -52,6 +54,7 @@ import tempfile
 import uuid
 from collections.abc import Callable
 from contextlib import contextmanager, nullcontext
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
@@ -190,10 +193,10 @@ def _drain_width(spark: SparkSession, source_path: str) -> int:
 
 @contextmanager
 def _drain_confs(spark: SparkSession, shuffle_partitions: int | None):
-    """Disable throwaway-checkpoint overhead for the duration of a
-    synchronous drain; restores the previous settings on exit.
+    """Disable throwaway-checkpoint overhead around the start of a
+    throwaway leg; restores the previous settings on exit.
     ``shuffle_partitions`` additionally scopes a size-scaled state/
-    shuffle width to the drain (see :func:`_drain_width`)."""
+    shuffle width to the leg (see :func:`_drain_width`)."""
     confs = dict(_EPHEMERAL_CONFS)
     if shuffle_partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
@@ -229,36 +232,46 @@ def _read_parquet_stream(
     return reader.parquet(path)
 
 
-def _drain(
-    stream: DataFrame,
-    name: str,
-    sink: Callable[[DataStreamWriter], DataStreamWriter],
-    shuffle_partitions: int | None = None,
-    checkpoint_path: str | None = None,
-) -> None:
-    """Start ``sink(stream.writeStream)`` with an availableNow trigger
-    and wait for it. Without ``checkpoint_path`` the checkpoint is
-    throwaway scratch: drain confs scoped to the run, released in
-    ``finally``. A given ``checkpoint_path`` is durable: session confs,
-    never released."""
-    spark = stream.sparkSession
-    if checkpoint_path is None:
-        checkpoint = ephemeral_checkpoint_dir(f"ckpt_{name}_")
-        ctx = _drain_confs(spark, shuffle_partitions)
-    else:
-        checkpoint, ctx = checkpoint_path, nullcontext()
+class Leg(NamedTuple):
+    """One query of a drain. ``name`` prefixes its throwaway
+    checkpoint; a given ``checkpoint_path`` is durable instead."""
+
+    name: str
+    stream: DataFrame
+    sink: Callable[[DataStreamWriter], DataStreamWriter]
+    checkpoint_path: str | None = None
+
+
+def drain(*legs: Leg, shuffle_partitions: int | None = None) -> None:
+    """Start every leg, then await them all. A throwaway leg starts
+    under the drain confs (``shuffle_partitions`` scopes its width)
+    and its checkpoint is released in ``finally``; a durable leg
+    starts on the session confs and keeps its checkpoint. If any leg
+    raises, the others are stopped before the error propagates."""
+    scratch = [
+        None if leg.checkpoint_path else ephemeral_checkpoint_dir(f"ckpt_{leg.name}_")
+        for leg in legs
+    ]
+    queries = []
     try:
-        with ctx:
-            q = (
-                sink(stream.writeStream)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", checkpoint)
-                .start()
-            )
+        for leg, tmp in zip(legs, scratch):
+            spark = leg.stream.sparkSession
+            with _drain_confs(spark, shuffle_partitions) if tmp else nullcontext():
+                queries.append(
+                    leg.sink(leg.stream.writeStream)
+                    .trigger(availableNow=True)
+                    .option("checkpointLocation", tmp or leg.checkpoint_path)
+                    .start()
+                )
+        for q in queries:
             q.awaitTermination()
+    except BaseException:
+        for q in queries:
+            q.stop()
+        raise
     finally:
-        if checkpoint_path is None:
-            discard_ephemeral_dir(checkpoint)
+        for tmp in scratch:
+            discard_ephemeral_dir(tmp)
 
 
 def drain_to_memory(
@@ -273,10 +286,12 @@ def drain_to_memory(
     named memory sink at the size-scaled width; returns the sink table
     as a batch DataFrame."""
     table = f"{name}_{uuid.uuid4().hex[:8]}"
-    _drain(
-        build(_read_parquet_stream(spark, source_path, max_files_per_trigger)),
-        name,
-        lambda w: w.format("memory").queryName(table).outputMode(output_mode),
+    drain(
+        Leg(
+            name,
+            build(_read_parquet_stream(spark, source_path, max_files_per_trigger)),
+            lambda w: w.format("memory").queryName(table).outputMode(output_mode),
+        ),
         shuffle_partitions=_drain_width(spark, source_path),
     )
     return spark.table(table)
@@ -292,10 +307,6 @@ def drain_foreach_batch(
 ) -> None:
     """Drain the file stream of ``source_path`` through
     ``foreachBatch(fn)`` at the session width. ``checkpoint_path``
-    makes the drain resumable (see :func:`_drain`)."""
-    _drain(
-        _read_parquet_stream(spark, source_path, max_files_per_trigger),
-        name,
-        lambda w: w.foreachBatch(fn),
-        checkpoint_path=checkpoint_path,
-    )
+    makes the drain resumable (see :class:`Leg`)."""
+    stream = _read_parquet_stream(spark, source_path, max_files_per_trigger)
+    drain(Leg(name, stream, lambda w: w.foreachBatch(fn), checkpoint_path))

@@ -84,7 +84,8 @@ class InjectedCrash(RuntimeError):
     """Stands in for the process dying inside a crash window."""
 
 
-def main() -> None:
+def soak(work: Path) -> bool:
+    """Soak with all state under ``work``; write the report, return ok."""
     from db_cdc_poc_spark.operators.cdc import apply_changes
     from db_cdc_poc_spark.operators.ivm import delta_aggregate
     from db_cdc_poc_spark.operators.text import whitespace_token_count
@@ -105,7 +106,6 @@ def main() -> None:
     chunk = (n_docs // N_TRIGGERS) + 1
     lines.append(f"docs={n_docs} chunk~{chunk}")
 
-    work = Path(tempfile.mkdtemp(prefix="crash_soak_"))
     idx = StreamingDedupIndex(
         str(work / "lsh"), threshold=0.5, num_buckets=16, compact_every=3
     )
@@ -379,7 +379,13 @@ def main() -> None:
     lines.append("ALL PASS" if all_pass else "FAILURES PRESENT")
     OUT.write_text("\n".join(lines) + "\n")
     print(lines[-1])
-    sys.exit(0 if all_pass else 1)
+    return all_pass
+
+
+def main() -> None:
+    with tempfile.TemporaryDirectory(prefix="crash_soak_") as work:
+        ok = soak(Path(work))
+    sys.exit(0 if ok else 1)
 
 
 if __name__ == "__main__":

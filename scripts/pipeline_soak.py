@@ -67,7 +67,8 @@ def dir_stats(path: Path) -> tuple[int, int]:
     return total, versions
 
 
-def main() -> None:
+def soak(work: Path) -> bool:
+    """Soak with all state under ``work``; write the report, return ok."""
     from db_cdc_poc_spark.operators.cdc import apply_changes
     from db_cdc_poc_spark.operators.text import whitespace_token_count
     from db_cdc_poc_spark.plans.registry import Expectation, TableRegistry
@@ -88,7 +89,6 @@ def main() -> None:
     chunk = (n_docs // N_TRIGGERS) + 1
     lines.append(f"docs={n_docs} chunk~{chunk}")
 
-    work = Path(tempfile.mkdtemp(prefix="pipeline_soak_"))
     idx = StreamingDedupIndex(
         str(work / "lsh"), threshold=0.5, num_buckets=16, compact_every=4
     )
@@ -301,7 +301,13 @@ def main() -> None:
     lines.append("ALL PASS" if all_pass else "FAILURES PRESENT")
     OUT.write_text("\n".join(lines) + "\n")
     print(lines[-1])
-    sys.exit(0 if all_pass else 1)
+    return all_pass
+
+
+def main() -> None:
+    with tempfile.TemporaryDirectory(prefix="pipeline_soak_") as work:
+        ok = soak(Path(work))
+    sys.exit(0 if ok else 1)
 
 
 if __name__ == "__main__":

@@ -43,6 +43,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from db_cdc_poc_spark.session import get_spark  # noqa: E402
+from db_cdc_poc_spark.streaming.ephemeral import drain_foreach_batch  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SOAK_DIR", ".benchdata/sf1.0")
 OUT = Path("STREAMING_SOAK_sf1.txt")
@@ -58,7 +59,7 @@ def dir_stats(path: Path) -> tuple[int, int]:
     return total, versions
 
 
-def dedup_soak(spark, lines: list[str]) -> bool:
+def dedup_soak(spark, lines: list[str], work: Path) -> bool:
     from db_cdc_poc_spark.operators.text import whitespace_token_count
     from db_cdc_poc_spark.streaming.dedup_index import StreamingDedupIndex
 
@@ -70,7 +71,7 @@ def dedup_soak(spark, lines: list[str]) -> bool:
     n_shingled = docs.filter(whitespace_token_count("text") >= 3).count()
 
     # 10 id-ordered chunks, then the same 10 re-sent under offset ids
-    staged = Path(tempfile.mkdtemp(prefix="soak_docs_")) / "stream"
+    staged = work / "docs"
     chunk = (n_docs // 10) + 1
     base = docs.withColumn("__c", F.floor(F.col("doc_id") / chunk))
     for c in range(10):
@@ -86,7 +87,7 @@ def dedup_soak(spark, lines: list[str]) -> bool:
             "append"
         ).parquet(str(staged))
 
-    idx_path = tempfile.mkdtemp(prefix="soak_idx_") + "/index"
+    idx_path = str(work / "index")
     idx = StreamingDedupIndex(idx_path, num_buckets=32)
     decisions: list = []
     walls: list[float] = []
@@ -110,16 +111,7 @@ def dedup_soak(spark, lines: list[str]) -> bool:
             f"index_rows={n_live:>8} bytes={b:>11} versions={v:>3}"
         )
 
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(staged))
-        .writeStream.foreachBatch(timed_fn)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="soak_ck_"))
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(spark, str(staged), timed_fn, "soak_dedup", max_files_per_trigger=1)
 
     lines.append("")
     lines.append(
@@ -179,11 +171,11 @@ def dedup_soak(spark, lines: list[str]) -> bool:
     return ok
 
 
-def cdc_soak(spark, lines: list[str]) -> bool:
+def cdc_soak(spark, lines: list[str], work: Path) -> bool:
     from db_cdc_poc_spark.streaming.cdc import CdcTarget
 
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    staged = Path(tempfile.mkdtemp(prefix="soak_ev_")) / "stream"
+    staged = work / "events"
     days = [
         r.day
         for r in ev.select(F.date_format("ts", "yyyy-MM-dd").alias("day"))
@@ -204,7 +196,7 @@ def cdc_soak(spark, lines: list[str]) -> bool:
         ).parquet(str(staged))
 
     tgt = CdcTarget(
-        tempfile.mkdtemp(prefix="soak_cdc_") + "/target",
+        str(work / "target"),
         keys="user_id",
         sequence_by=("ts", "event_id"),
         num_buckets=32,
@@ -223,16 +215,7 @@ def cdc_soak(spark, lines: list[str]) -> bool:
             f"target_rows={n:>6} bytes={b:>10} versions={v:>3}"
         )
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(staged))
-        .writeStream.foreachBatch(fn)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="soak_ck2_"))
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(spark, str(staged), fn, "soak_cdc", max_files_per_trigger=1)
 
     lines.append("")
     lines.append(
@@ -267,12 +250,14 @@ def cdc_soak(spark, lines: list[str]) -> bool:
 def main() -> None:
     spark = get_spark(app_name="streaming-soak", cpus=16)
     lines = [f"# streaming soak @ {SF_DIR}"]
-    ok = dedup_soak(spark, lines)
-    ok = cdc_soak(spark, lines) and ok
-    lines.append("")
-    lines.append("ALL PASS" if ok else "FAILURES PRESENT")
-    OUT.write_text("\n".join(lines) + "\n")
-    print("\n".join(lines))
+    with tempfile.TemporaryDirectory(prefix="streaming_soak_") as tmp:
+        work = Path(tmp)
+        ok = dedup_soak(spark, lines, work)
+        ok = cdc_soak(spark, lines, work) and ok
+        lines.append("")
+        lines.append("ALL PASS" if ok else "FAILURES PRESENT")
+        OUT.write_text("\n".join(lines) + "\n")
+        print("\n".join(lines))
     sys.exit(0 if ok else 1)
 
 

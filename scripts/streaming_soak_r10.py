@@ -47,6 +47,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from db_cdc_poc_spark.session import get_spark  # noqa: E402
+from db_cdc_poc_spark.streaming.ephemeral import drain_foreach_batch  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SOAK_DIR", ".benchdata/sf1.0")
 OUT = Path("STREAMING_SOAK_sf1_r10.txt")
@@ -65,7 +66,8 @@ def median(xs: list[float]) -> float:
     return s[len(s) // 2]
 
 
-def main() -> None:
+def soak(work: Path) -> bool:
+    """Soak with all state under ``work``; write the report, return ok."""
     from db_cdc_poc_spark.operators.text import whitespace_token_count, whitespace_tokens
     from db_cdc_poc_spark.streaming.dedup_index import StreamingDedupIndex
 
@@ -91,7 +93,7 @@ def main() -> None:
         ("D_resend_rev", reversed_docs.withColumn("doc_id", F.col("doc_id") + 10_000_000), 10_000_000),
     ]
 
-    staged = Path(tempfile.mkdtemp(prefix="soak10_docs_")) / "stream"
+    staged = work / "docs"
     for _, rdf, off in rounds:
         base = rdf.withColumn(
             "__c", F.floor((F.col("doc_id") % 10_000_000) / chunk)
@@ -102,7 +104,7 @@ def main() -> None:
             ).parquet(str(staged))
 
     idx = StreamingDedupIndex(
-        tempfile.mkdtemp(prefix="soak10_idx_") + "/index",
+        str(work / "index"),
         num_buckets=32,
         compact_every=16,
     )
@@ -126,16 +128,7 @@ def main() -> None:
         )
         print(per_trigger[-1], flush=True)
 
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(staged))
-        .writeStream.foreachBatch(timed_fn)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="soak10_ck_"))
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(spark, str(staged), timed_fn, "soak10", max_files_per_trigger=1)
     lines.extend(per_trigger)
     ok = True
 
@@ -218,6 +211,12 @@ def main() -> None:
     lines.append("ALL PASS" if ok else "FAILURES PRESENT")
     OUT.write_text("\n".join(lines) + "\n")
     print(lines[-1])
+    return ok
+
+
+def main() -> None:
+    with tempfile.TemporaryDirectory(prefix="soak10_") as work:
+        ok = soak(Path(work))
     sys.exit(0 if ok else 1)
 
 

@@ -1,4 +1,4 @@
-"""The one throwaway drain (``streaming/ephemeral.py``) and its scratch.
+"""The one drain core (``streaming/ephemeral.py``) and its scratch.
 
 Ephemeral scratch is guarded: a RAM-backed base is only chosen with
 free-space headroom (falls back to the disk tempdir otherwise), dirs
@@ -6,13 +6,16 @@ are tracked, and ``discard_ephemeral_dir`` releases them eagerly.
 Every drain releases its throwaway checkpoint when it returns, the CDC
 and gold drains release their default state tables once the result is
 pinned, a caller-given checkpoint survives, and a memory-sink drain's state width
-scales with the size of the directory it reads.
+scales with the size of the directory it reads. No other package module
+sets an availableNow trigger or awaits a streaming query.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import re
+from pathlib import Path
 
 import pytest
 
@@ -190,3 +193,23 @@ def test_memory_drain_width_scales_with_source_size(spark, tmp_path):
 
     missing = str(tmp_path / "missing")
     assert ephemeral._drain_width(spark, missing) == session
+
+
+# -- one drain ----------------------------------------------------------------
+
+
+def test_every_available_now_query_starts_and_is_awaited_in_ephemeral():
+    """The package has one drain core: no module outside
+    ``streaming/ephemeral.py`` sets an availableNow trigger or awaits a
+    streaming query itself."""
+    core = Path(ephemeral.__file__).resolve()
+    pkg = core.parent.parent
+    pattern = re.compile(r"awaitTermination\(|trigger\(\s*availableNow")
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == core:
+            continue
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if pattern.search(line):
+                offenders.append(f"{path.relative_to(pkg)}:{n}")
+    assert offenders == []

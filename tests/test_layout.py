@@ -5,7 +5,6 @@ unlike a single-column sort."""
 from __future__ import annotations
 
 import glob
-import tempfile
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -48,7 +47,7 @@ def _per_file_coverage(path: str, col: str, span: float) -> float:
     return sum(fracs) / len(fracs)
 
 
-def test_zorder_write_keeps_both_dims_tight(spark):
+def test_zorder_write_keeps_both_dims_tight(spark, tmp_path_factory):
     """16 files over a uniform 2-D grid: a sort by x alone leaves every
     file covering the FULL y range (coverage ~1.0); the z-ordered
     layout keeps both dims' mean per-file coverage well below it —
@@ -62,10 +61,10 @@ def test_zorder_write_keeps_both_dims_tight(spark):
         )
         .repartition(8)
     )
-    zdir = tempfile.mkdtemp(prefix="zord_") + "/t"
+    zdir = str(tmp_path_factory.mktemp("zord_")) + "/t"
     write_zordered(df, zdir, {"x": (0, 127), "y": (0, 127)}, num_files=16, bits=7)
 
-    xdir = tempfile.mkdtemp(prefix="xsort_") + "/t"
+    xdir = str(tmp_path_factory.mktemp("xsort_")) + "/t"
     (
         df.repartitionByRange(16, F.col("x"))
         .sortWithinPartitions("x")
@@ -85,8 +84,8 @@ def test_zorder_write_keeps_both_dims_tight(spark):
     assert back.agg(F.sum("x")).collect()[0][0] == df.agg(F.sum("x")).collect()[0][0]
 
 
-def test_compact_parquet_shrinks_file_count_preserving_data(spark):
-    src = tempfile.mkdtemp(prefix="frag_") + "/t"
+def test_compact_parquet_shrinks_file_count_preserving_data(spark, tmp_path_factory):
+    src = str(tmp_path_factory.mktemp("frag_")) + "/t"
     df = spark.range(50_000).select(
         F.col("id"), (F.col("id") % 97).alias("k")
     )
@@ -103,8 +102,8 @@ def test_compact_parquet_shrinks_file_count_preserving_data(spark):
     assert back.agg(F.sum("id")).collect()[0][0] == sum(range(50_000))
 
 
-def test_compact_parquet_sorted_keeps_clustering(spark):
-    src = tempfile.mkdtemp(prefix="fragsort_") + "/t"
+def test_compact_parquet_sorted_keeps_clustering(spark, tmp_path_factory):
+    src = str(tmp_path_factory.mktemp("fragsort_")) + "/t"
     spark.range(20_000).select((F.col("id") % 500).alias("k")).repartition(
         32
     ).write.parquet(src)

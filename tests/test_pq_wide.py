@@ -15,8 +15,6 @@ through pq_meta and parquet schema."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -157,13 +155,13 @@ def test_wide_adc_topk_runs_and_ranks(spark):
 
 
 @pytest.fixture(scope="module")
-def wide_stored(spark):
+def wide_stored(spark, tmp_path_factory):
     emb = load_table(spark, SF_DIR, "embeddings")
     coarse, _ = _pq_trained(spark, SF_DIR)
     idx = IvfIndex.build(
         emb,
         centroids=coarse.select(F.col("list_id").alias("vec_id"), "embedding"),
-        path=tempfile.mkdtemp(prefix="ivfpq_wide_") + "/index",
+        path=str(tmp_path_factory.mktemp("ivfpq_wide_")) + "/index",
     )
     idx.build_pq(spark, _wide_cb(emb), m=16)  # auto-wide, 112-bit
     return idx, emb, coarse
@@ -232,19 +230,19 @@ def test_stored_wide_probe_matches_inline(spark, wide_stored):
     assert got == want and got
 
 
-def test_stored_wide_append_equals_rebuild(spark):
+def test_stored_wide_append_equals_rebuild(spark, tmp_path_factory):
     emb = load_table(spark, SF_DIR, "embeddings")
     coarse, _ = _pq_trained(spark, SF_DIR)
     cents = coarse.select(F.col("list_id").alias("vec_id"), "embedding")
     cb = _wide_cb(emb)
     inc = IvfIndex.build(
         emb.filter(F.col("vec_id") % 2 == 0), centroids=cents,
-        path=tempfile.mkdtemp(prefix="ivfpqwa_") + "/i",
+        path=str(tmp_path_factory.mktemp("ivfpqwa_")) + "/i",
     )
     inc.build_pq(spark, cb, m=16)
     inc.append(emb.filter(F.col("vec_id") % 2 != 0))
     full = IvfIndex.build(
-        emb, centroids=cents, path=tempfile.mkdtemp(prefix="ivfpqwb_") + "/i"
+        emb, centroids=cents, path=str(tmp_path_factory.mktemp("ivfpqwb_")) + "/i"
     )
     full.build_pq(spark, cb, m=16)
 

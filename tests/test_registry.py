@@ -3,8 +3,6 @@ order, cycle detection, materialization."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from db_cdc_poc_spark.plans.registry import TableRegistry
@@ -66,7 +64,7 @@ def test_unknown_table(spark):
         reg.build("nope")
 
 
-def test_materialize_writes_parquet(spark):
+def test_materialize_writes_parquet(spark, tmp_path_factory):
     reg = TableRegistry(spark)
 
     @reg.table()
@@ -77,13 +75,13 @@ def test_materialize_writes_parquet(spark):
     def squares():
         return reg.read("nums").selectExpr("id", "id * id AS sq")
 
-    root = tempfile.mkdtemp(prefix="reg_mat_")
+    root = str(tmp_path_factory.mktemp("reg_mat_"))
     reg.materialize(root)
     back = spark.read.parquet(f"{root}/squares")
     assert {(r.id, r.sq) for r in back.collect()} == {(i, i * i) for i in range(5)}
 
 
-def test_materialize_partitioned_and_partition_pruning(spark):
+def test_materialize_partitioned_and_partition_pruning(spark, tmp_path_factory):
     # SURVEY §4: gold/silver partitioned by store_id must turn a
     # store_id predicate into PartitionFilters (directory pruning at
     # the scan), not a post-scan data filter
@@ -95,7 +93,7 @@ def test_materialize_partitioned_and_partition_pruning(spark):
             "CAST(id % 4 AS INT) AS store_id", "id AS item_id", "id * 2 AS qty"
         )
 
-    root = tempfile.mkdtemp(prefix="reg_part_")
+    root = str(tmp_path_factory.mktemp("reg_part_"))
     reg.materialize(root, partition_by={"gold": ["store_id"]})
     # hive-style layout on disk
     from pathlib import Path

@@ -131,7 +131,9 @@ def test_temperature_mix_subset_and_deterministic(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_recluster_crash_between_writes_duplicates_not_loss(spark, monkeypatch):
+def test_recluster_crash_between_writes_duplicates_not_loss(
+    spark, monkeypatch, tmp_path_factory
+):
     """ADVICE (vector_index.recluster): the evacuee append now precedes
     the selected-partition overwrite, so a crash between the two writes
     leaves transient duplicates — never silently dropped vectors — and
@@ -158,9 +160,8 @@ def test_recluster_crash_between_writes_duplicates_not_loss(spark, monkeypatch):
         [(i, [float(x) for x in 2 * e[i]]) for i in range(3)],
         "vec_id long, embedding array<double>",
     )
-    import tempfile
 
-    path = tempfile.mkdtemp(prefix="ivfcrash_") + "/index"
+    path = str(tmp_path_factory.mktemp("ivfcrash_")) + "/index"
     idx = IvfIndex.build(corpus, centroids=cents, path=path)
     all_ids = {i for i, _ in rows}
 

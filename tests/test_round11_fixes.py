@@ -21,9 +21,6 @@ BloomFront cache bound (VERDICT r10 asks #3 and ADVICE 1-4).
 
 from __future__ import annotations
 
-import tempfile
-from pathlib import Path
-
 import numpy as np
 import pytest
 from pyspark.sql import Row
@@ -38,11 +35,11 @@ from db_cdc_poc_spark.streaming.cdc import CdcTarget
 # -- 1: changes_since across additive schema evolution --------------------
 
 
-def test_changes_since_survives_added_column(spark):
+def test_changes_since_survives_added_column(spark, tmp_path_factory):
     """A column added between the watermark commit and now appears in
     both before/after structs, NULL on the old side."""
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_evo_"), keys="k", sequence_by="seq"
+        str(tmp_path_factory.mktemp("cdc_evo_")), keys="k", sequence_by="seq"
     )
     target.upsert_batch(
         spark.createDataFrame([Row(k=1, seq=1, v=10), Row(k=2, seq=1, v=20)])
@@ -62,13 +59,13 @@ def test_changes_since_survives_added_column(spark):
     assert set(r.before.asDict()) == set(r.after.asDict())
 
 
-def test_changes_since_survives_numeric_widening(spark):
+def test_changes_since_survives_numeric_widening(spark, tmp_path_factory):
     """int -> bigint widening between commits: both sides cast to the
     wider type instead of raising on struct-type mismatch."""
     import pyspark.sql.types as T
 
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_widen_"), keys="k", sequence_by="seq"
+        str(tmp_path_factory.mktemp("cdc_widen_")), keys="k", sequence_by="seq"
     )
     narrow = T.StructType(
         [
@@ -91,11 +88,11 @@ def test_changes_since_survives_numeric_widening(spark):
     assert r.op == "u" and r.before.v == 10 and r.after.v == 2**40
 
 
-def test_changes_since_bootstrap_quoted_column_names(spark):
+def test_changes_since_bootstrap_quoted_column_names(spark, tmp_path_factory):
     """commit=None with payload names needing backticks (space, dash)
     must not crash on type construction."""
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="cdc_quote_"), keys="k", sequence_by="seq"
+        str(tmp_path_factory.mktemp("cdc_quote_")), keys="k", sequence_by="seq"
     )
     df = (
         spark.createDataFrame([Row(k=1, seq=1, v=5)])
@@ -133,7 +130,7 @@ def test_known_order_raises_cycle_not_recursion(spark):
 # -- 4: non-due upstream served from parquet -------------------------------
 
 
-def test_non_due_upstream_builder_not_reexecuted(spark):
+def test_non_due_upstream_builder_not_reexecuted(spark, tmp_path_factory):
     """A slow-trigger upstream's builder fires once per ITS cadence,
     not once per downstream cycle — re-execution would double-apply
     side effects (index appends, upserts) the runner contract makes
@@ -153,7 +150,7 @@ def test_non_due_upstream_builder_not_reexecuted(spark):
         return reg.read("dim").selectExpr("sum(id) AS s")
 
     fake_now = [0.0]
-    root = tempfile.mkdtemp(prefix="runner_r11_")
+    root = str(tmp_path_factory.mktemp("runner_r11_"))
     runner = PipelineRunner(reg, root, clock=lambda: fake_now[0])
 
     assert set(runner.run_cycle()) == {"dim", "gold"}
@@ -174,11 +171,11 @@ def test_non_due_upstream_builder_not_reexecuted(spark):
 # -- 5: BloomFront LRU bound ------------------------------------------------
 
 
-def test_bloom_cache_bounded_and_correct_across_evictions():
+def test_bloom_cache_bounded_and_correct_across_evictions(tmp_path_factory):
     bf = BloomFront("_t_bloom.npz", 1 << 12, max_entries=3)
     dirs, keysets = [], []
     for i in range(8):
-        d = Path(tempfile.mkdtemp(prefix=f"bloom_lru_{i}_"))
+        d = tmp_path_factory.mktemp(f"bloom_lru_{i}_")
         keys = np.arange(i * 100, i * 100 + 50, dtype=np.int64)
         bf.write(d, keys)
         dirs.append(d)
@@ -214,7 +211,7 @@ def test_bloom_cap_validation():
 # -- 5b: IVF drift sketch (ask #4) ------------------------------------------
 
 
-def test_drift_sketch_fast_path_equals_full_scan(spark):
+def test_drift_sketch_fast_path_equals_full_scan(spark, tmp_path_factory):
     """drift_report's sketch fast path (per-list partials maintained at
     build/append) returns byte-identical rows to the full corpus x
     codebook scan, and every guard (missing sketch, short sketch,
@@ -238,7 +235,7 @@ def test_drift_sketch_fast_path_equals_full_scan(spark):
     cents = spark.createDataFrame(
         [(0, [0.0] * d), (1, [2.0] * d)], "vec_id long, embedding array<double>"
     )
-    path = tempfile.mkdtemp(prefix="drift_sk_") + "/idx"
+    path = str(tmp_path_factory.mktemp("drift_sk_")) + "/idx"
     idx = IvfIndex.build(corpus, centroids=cents, path=path)
 
     def report_set():
@@ -309,7 +306,7 @@ def test_drift_sketch_fast_path_equals_full_scan(spark):
 # -- 6: changes_since-backed gold in the composed runner (ask #2) ----------
 
 
-def test_runner_gold_folds_changes_since_and_survives_refire(spark):
+def test_runner_gold_folds_changes_since_and_survives_refire(spark, tmp_path_factory):
     """The production composed path: registry/runner pipeline whose
     gold consumes ``ChangelogFoldedAggregate`` (the CdcTarget's OWN
     applied-state delta, keys_filter batch-bounded) instead of a
@@ -320,7 +317,7 @@ def test_runner_gold_folds_changes_since_and_survives_refire(spark):
     from db_cdc_poc_spark.streaming.gold import ChangelogFoldedAggregate
 
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="gold_fold_"), keys="k", sequence_by="seq"
+        str(tmp_path_factory.mktemp("gold_fold_")), keys="k", sequence_by="seq"
     )
     fold = ChangelogFoldedAggregate(target, group_keys=["g"], measures=["v"])
     reg = TableRegistry(spark)
@@ -346,7 +343,7 @@ def test_runner_gold_folds_changes_since_and_survives_refire(spark):
         keys = reg.read("bronze").select("k").distinct()
         return fold.fold_trigger(spark, keys)
 
-    root = tempfile.mkdtemp(prefix="runner_gold_")
+    root = str(tmp_path_factory.mktemp("runner_gold_"))
     runner = PipelineRunner(reg, root, clock=lambda: 0.0)
 
     def batch_gold():
@@ -373,7 +370,7 @@ def test_runner_gold_folds_changes_since_and_survives_refire(spark):
             assert after == before == batch_gold()
 
 
-def test_fold_raises_loudly_when_watermark_vacuumed(spark):
+def test_fold_raises_loudly_when_watermark_vacuumed(spark, tmp_path_factory):
     """Retention contract: if the fold's watermark commit has been
     vacuumed (keep_versions too small for the fold lag), the fold
     raises StateVersionVacuumedError — never a silent full refold,
@@ -382,7 +379,7 @@ def test_fold_raises_loudly_when_watermark_vacuumed(spark):
     from db_cdc_poc_spark.streaming.state import StateVersionVacuumedError
 
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="gold_vac_"),
+        str(tmp_path_factory.mktemp("gold_vac_")),
         keys="k",
         sequence_by="seq",
         keep_versions=2,

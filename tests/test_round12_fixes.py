@@ -18,7 +18,6 @@
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 from db_cdc_poc_spark.partitioning import estimated_scan_width, spread_scan
 from db_cdc_poc_spark.plans.registry import TableRegistry
@@ -40,10 +39,10 @@ def _recs(n, start=0, part=0):
 # -- 1: cap below partition count must still make progress ------------------
 
 
-def test_rate_limit_cap_below_partition_count_progresses():
+def test_rate_limit_cap_below_partition_count_progresses(tmp_path_factory):
     """4 partitions x lag 3 with cap 2: floors are all 0; the remainder
     hand-out must advance 2 partitions per trigger until drained."""
-    path = tempfile.mkdtemp(prefix="wire_floor_")
+    path = str(tmp_path_factory.mktemp("wire_floor_"))
     for p in range(4):
         append_records(path, p, _recs(3, part=p))
     r = KafkaWireStreamReader(
@@ -63,10 +62,10 @@ def test_rate_limit_cap_below_partition_count_progresses():
     assert len(steps) == 6
 
 
-def test_rate_limit_cap_below_partition_count_stream_drains(spark):
+def test_rate_limit_cap_below_partition_count_stream_drains(spark, tmp_path_factory):
     """End-to-end: processAllAvailable must deliver every record even
     when the cap can't give each lagging partition a floor share."""
-    path = tempfile.mkdtemp(prefix="wire_floor_e2e_")
+    path = str(tmp_path_factory.mktemp("wire_floor_e2e_"))
     for p in range(4):
         append_records(path, p, _recs(3, part=p))
     register(spark)
@@ -85,7 +84,7 @@ def test_rate_limit_cap_below_partition_count_stream_drains(spark):
         .load()
         .writeStream.foreachBatch(sink)
         .trigger(processingTime="50 milliseconds")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_floor_"))
+        .option("checkpointLocation", str(tmp_path_factory.mktemp("ckpt_floor_")))
         .start()
     )
     try:
@@ -97,10 +96,10 @@ def test_rate_limit_cap_below_partition_count_stream_drains(spark):
     assert all(len(batch) <= 2 for batch in got)
 
 
-def test_rate_limit_floor_still_proportional_when_cap_allows():
+def test_rate_limit_floor_still_proportional_when_cap_allows(tmp_path_factory):
     """Lags (8, 4) with cap 6 keep the proportional split (4, 2) —
     the remainder path must not disturb the exact-floor case."""
-    path = tempfile.mkdtemp(prefix="wire_prop_")
+    path = str(tmp_path_factory.mktemp("wire_prop_"))
     append_records(path, 0, _recs(8))
     append_records(path, 1, _recs(4, part=1))
     r = KafkaWireStreamReader(
@@ -115,8 +114,8 @@ def test_rate_limit_floor_still_proportional_when_cap_allows():
 # -- 2: first trigger rate-limits against the cached initial offset ---------
 
 
-def test_first_trigger_respects_cap_with_starting_latest():
-    path = tempfile.mkdtemp(prefix="wire_latest_cap_")
+def test_first_trigger_respects_cap_with_starting_latest(tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("wire_latest_cap_"))
     append_records(path, 0, _recs(5))
     r = KafkaWireStreamReader(
         {"path": path, "startingoffsets": "latest", "maxoffsetspertrigger": "2"}
@@ -132,7 +131,7 @@ def test_first_trigger_respects_cap_with_starting_latest():
 # -- 3: runner preloads only the due set's transitive upstreams -------------
 
 
-def test_run_cycle_ignores_unrelated_missing_snapshot(spark):
+def test_run_cycle_ignores_unrelated_missing_snapshot(spark, tmp_path_factory):
     reg = TableRegistry(spark)
 
     @reg.table(trigger="24 hours")
@@ -143,7 +142,7 @@ def test_run_cycle_ignores_unrelated_missing_snapshot(spark):
     def fast():
         return spark.range(3).selectExpr("id AS v")
 
-    root = tempfile.mkdtemp(prefix="runner_unrel_")
+    root = str(tmp_path_factory.mktemp("runner_unrel_"))
     fake_now = [0.0]
     runner = PipelineRunner(reg, root, clock=lambda: fake_now[0])
     assert set(runner.run_cycle()) == {"lonely", "fast"}
@@ -154,7 +153,7 @@ def test_run_cycle_ignores_unrelated_missing_snapshot(spark):
     assert runner.run_cycle() == ["fast"]
 
 
-def test_run_cycle_still_serves_needed_upstream_from_snapshot(spark):
+def test_run_cycle_still_serves_needed_upstream_from_snapshot(spark, tmp_path_factory):
     reg = TableRegistry(spark)
     builds = {"dim": 0}
 
@@ -167,7 +166,7 @@ def test_run_cycle_still_serves_needed_upstream_from_snapshot(spark):
     def gold():
         return reg.read("dim").selectExpr("sum(id) AS s")
 
-    root = tempfile.mkdtemp(prefix="runner_need_")
+    root = str(tmp_path_factory.mktemp("runner_need_"))
     fake_now = [0.0]
     runner = PipelineRunner(reg, root, clock=lambda: fake_now[0])
     runner.run_cycle()
@@ -180,7 +179,7 @@ def test_run_cycle_still_serves_needed_upstream_from_snapshot(spark):
 # -- ask #6: MIN/MAX-bearing gold folded from the changelog ------------------
 
 
-def test_changelog_fold_maintains_max_under_deletes(spark):
+def test_changelog_fold_maintains_max_under_deletes(spark, tmp_path_factory):
     """The reference's gold carries MAX(date_time)
     (notebooks/04_Current_Inventory.sql:17) — a sum/count fold cannot
     maintain it under deletes. ChangelogFoldedAggregate now wires the
@@ -199,7 +198,7 @@ def test_changelog_fold_maintains_max_under_deletes(spark):
         return datetime.datetime(2026, 1, 1, h)
 
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="gold_mm_"),
+        str(tmp_path_factory.mktemp("gold_mm_")),
         keys="k",
         sequence_by="seq",
         apply_as_deletes="__del",
@@ -250,7 +249,7 @@ def test_changelog_fold_maintains_max_under_deletes(spark):
     assert after == before
 
 
-def test_changelog_fold_minmax_only(spark):
+def test_changelog_fold_minmax_only(spark, tmp_path_factory):
     """min/max with no sum measures: the mm table alone is the gold."""
     from pyspark.sql import Row
 
@@ -258,7 +257,7 @@ def test_changelog_fold_minmax_only(spark):
     from db_cdc_poc_spark.streaming.gold import ChangelogFoldedAggregate
 
     target = CdcTarget(
-        tempfile.mkdtemp(prefix="gold_mmo_"), keys="k", sequence_by="seq"
+        str(tmp_path_factory.mktemp("gold_mmo_")), keys="k", sequence_by="seq"
     )
     fold = ChangelogFoldedAggregate(
         target, group_keys=["g"], min_cols=["v"], max_cols=["w"]

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from db_cdc_poc_spark.plans.registry import TableRegistry
@@ -19,7 +17,7 @@ def test_parse_trigger():
         parse_trigger("whenever")
 
 
-def test_runner_respects_trigger_cadence(spark):
+def test_runner_respects_trigger_cadence(spark, tmp_path_factory):
     reg = TableRegistry(spark)
     builds = {"dim": 0, "gold": 0}
 
@@ -35,7 +33,7 @@ def test_runner_respects_trigger_cadence(spark):
 
     fake_now = [0.0]
     runner = PipelineRunner(
-        reg, tempfile.mkdtemp(prefix="runner_"), clock=lambda: fake_now[0]
+        reg, str(tmp_path_factory.mktemp("runner_")), clock=lambda: fake_now[0]
     )
 
     assert set(runner.run_cycle()) == {"dim", "gold"}  # first tick: all due
@@ -48,7 +46,7 @@ def test_runner_respects_trigger_cadence(spark):
     assert set(runner.run_cycle()) == {"dim", "gold"}
 
 
-def test_runner_materializes_dependency_order(spark):
+def test_runner_materializes_dependency_order(spark, tmp_path_factory):
     reg = TableRegistry(spark)
 
     @reg.table(trigger="continuous")
@@ -59,7 +57,7 @@ def test_runner_materializes_dependency_order(spark):
     def derived():
         return reg.read("base").selectExpr("id * 10 AS x")
 
-    root = tempfile.mkdtemp(prefix="runner_mat_")
+    root = str(tmp_path_factory.mktemp("runner_mat_"))
     runner = PipelineRunner(reg, root, clock=lambda: 0.0)
     refreshed = runner.run_cycle()
     assert refreshed.index("base") < refreshed.index("derived")
@@ -68,7 +66,7 @@ def test_runner_materializes_dependency_order(spark):
     }
 
 
-def test_run_cycle_executes_each_builder_exactly_once(spark):
+def test_run_cycle_executes_each_builder_exactly_once(spark, tmp_path_factory):
     """Builders may carry side effects (dedup-index appends, CDC
     upserts), so one trigger must execute each due builder exactly
     once. The pre-fix runner built everything in due() (dependency
@@ -88,7 +86,7 @@ def test_run_cycle_executes_each_builder_exactly_once(spark):
         calls["derived"] += 1
         return reg.read("base").selectExpr("id + 1 AS y")
 
-    root = tempfile.mkdtemp(prefix="runner_once_")
+    root = str(tmp_path_factory.mktemp("runner_once_"))
     runner = PipelineRunner(reg, root, clock=lambda: 0.0)
     runner.run_cycle()
     assert calls == {"base": 1, "derived": 1}
@@ -96,7 +94,7 @@ def test_run_cycle_executes_each_builder_exactly_once(spark):
     assert calls == {"base": 2, "derived": 2}
 
 
-def test_run_cycle_materialized_output_matches_side_effect(spark):
+def test_run_cycle_materialized_output_matches_side_effect(spark, tmp_path_factory):
     """The parquet a cycle materializes must be the SAME evaluation the
     cycle's side effects consumed: a builder whose output depends on
     its own prior side effect (the streaming dedup shape — decisions
@@ -117,7 +115,7 @@ def test_run_cycle_materialized_output_matches_side_effect(spark):
         journal.append(100 + len(rows))
         return reg.read("effectful")
 
-    root = tempfile.mkdtemp(prefix="runner_diverge_")
+    root = str(tmp_path_factory.mktemp("runner_diverge_"))
     runner = PipelineRunner(reg, root, clock=lambda: 0.0)
     runner.run_cycle()
     # one execution -> effectful ran once -> its table has exactly 1 row

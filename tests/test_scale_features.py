@@ -3,8 +3,6 @@ approximate aggregates."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,10 +18,10 @@ from db_cdc_poc_spark.sources.testdata import load_table
 from .conftest import SF_DIR
 
 
-def test_partition_pruning_reaches_scan(spark):
+def test_partition_pruning_reaches_scan(spark, tmp_path_factory):
     # gold/silver tables partitioned by a low-cardinality key let the
     # scan skip directories entirely (SURVEY §4: engine design choice)
-    path = tempfile.mkdtemp(prefix="part_") + "/events_by_type"
+    path = str(tmp_path_factory.mktemp("part_")) + "/events_by_type"
     load_table(spark, SF_DIR, "events").write.partitionBy("event_type").parquet(path)
     df = spark.read.parquet(path).filter(F.col("event_type") == "click")
     n = df.count()

@@ -3,8 +3,6 @@ pruning on the probed lists, probe-many reuse."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,12 +14,12 @@ from .conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
-def built(spark):
+def built(spark, tmp_path_factory):
     emb = load_table(spark, SF_DIR, "embeddings")
     idx = IvfIndex.build(
         emb,
         centroids=emb.filter(F.col("vec_id") % 16 == 0),
-        path=tempfile.mkdtemp(prefix="ivfidx_") + "/index",
+        path=str(tmp_path_factory.mktemp("ivfidx_")) + "/index",
     )
     return idx, emb
 
@@ -66,7 +64,7 @@ def test_probe_many_is_stable(spark, built):
     assert a == b and a
 
 
-def test_append_matches_full_rebuild(spark):
+def test_append_matches_full_rebuild(spark, tmp_path_factory):
     """Incremental append == rebuilding from the union corpus, as long
     as the codebook is the same (assignments are per-vector and the
     stored codebook is reused)."""
@@ -76,11 +74,11 @@ def test_append_matches_full_rebuild(spark):
     cents = emb.filter(F.col("vec_id") % 16 == 0)
 
     inc = IvfIndex.build(
-        first, centroids=cents, path=tempfile.mkdtemp(prefix="ivfa_") + "/i"
+        first, centroids=cents, path=str(tmp_path_factory.mktemp("ivfa_")) + "/i"
     )
     inc.append(rest)
     full = IvfIndex.build(
-        emb, centroids=cents, path=tempfile.mkdtemp(prefix="ivfb_") + "/i"
+        emb, centroids=cents, path=str(tmp_path_factory.mktemp("ivfb_")) + "/i"
     )
     queries = emb.filter(F.col("vec_id") < 6)
     a = sorted(map(tuple, inc.probe(spark, queries, k=5, nprobe=4).collect()))
@@ -88,7 +86,7 @@ def test_append_matches_full_rebuild(spark):
     assert a == b and a
 
 
-def test_drift_report_healthy_after_build_and_append(spark):
+def test_drift_report_healthy_after_build_and_append(spark, tmp_path_factory):
     """Right after build+append against one codebook: zero misassigned
     members everywhere, occupancy sums to ~1e6, every list's avg
     member-to-centroid cosine is sane (> 0 for argmax assignment)."""
@@ -96,7 +94,7 @@ def test_drift_report_healthy_after_build_and_append(spark):
     cents = emb.filter(F.col("vec_id") % 16 == 0)
     idx = IvfIndex.build(
         emb.filter(F.col("vec_id") % 2 == 0), centroids=cents,
-        path=tempfile.mkdtemp(prefix="ivfd_") + "/i",
+        path=str(tmp_path_factory.mktemp("ivfd_")) + "/i",
     )
     idx.append(emb.filter(F.col("vec_id") % 2 != 0))
     rep = idx.drift_report(spark).collect()
@@ -108,11 +106,11 @@ def test_drift_report_healthy_after_build_and_append(spark):
     assert all(r.avg_cos_ppm > 0 for r in rep)
 
 
-def test_drift_report_flags_codebook_change(spark):
+def test_drift_report_flags_codebook_change(spark, tmp_path_factory):
     """Re-training the codebook under existing lists (the drift the
     report exists to catch) must surface as misassigned members."""
     emb = load_table(spark, SF_DIR, "embeddings")
-    path = tempfile.mkdtemp(prefix="ivft_") + "/i"
+    path = str(tmp_path_factory.mktemp("ivft_")) + "/i"
     idx = IvfIndex.build(
         emb, centroids=emb.filter(F.col("vec_id") % 16 == 0), path=path
     )
@@ -133,7 +131,7 @@ def test_drift_report_flags_codebook_change(spark):
     assert sum(r.n_misassigned for r in rep) > 0
 
 
-def test_assignment_stats_matches_drift_report_on_fresh_index(spark):
+def test_assignment_stats_matches_drift_report_on_fresh_index(spark, tmp_path_factory):
     """The inline relational form (the q147 oracle surface) and the
     persisted-index report agree on occupancy and distortion for a
     fresh build (where misassignment is structurally zero)."""
@@ -142,7 +140,7 @@ def test_assignment_stats_matches_drift_report_on_fresh_index(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     cents = emb.filter(F.col("vec_id") % 16 == 0)
     idx = IvfIndex.build(
-        emb, centroids=cents, path=tempfile.mkdtemp(prefix="ivfe_") + "/i"
+        emb, centroids=cents, path=str(tmp_path_factory.mktemp("ivfe_")) + "/i"
     )
     inline = {
         r.list_id: (r.n_vectors, r.occupancy_ppm, r.avg_cos_ppm)
@@ -155,7 +153,7 @@ def test_assignment_stats_matches_drift_report_on_fresh_index(spark):
     assert inline == stored
 
 
-def test_drift_report_orphaned_list_is_deterministic_null(spark):
+def test_drift_report_orphaned_list_is_deterministic_null(spark, tmp_path_factory):
     """A list_id absent from the stored codebook (external re-train
     that DROPPED a centroid — exactly the case the report exists to
     catch) must yield NULL own_cos-derived distortion, not an
@@ -165,7 +163,7 @@ def test_drift_report_orphaned_list_is_deterministic_null(spark):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     cents = emb.filter(F.col("vec_id") % 16 == 0)
-    path = tempfile.mkdtemp(prefix="ivforph_") + "/index"
+    path = str(tmp_path_factory.mktemp("ivforph_")) + "/index"
     idx = IvfIndex.build(emb, centroids=cents, path=path)
     # drop one centroid from the stored codebook: its list is orphaned
     # (materialize rows FIRST — overwriting a path a lazy plan still
@@ -187,7 +185,7 @@ def test_drift_report_orphaned_list_is_deterministic_null(spark):
     assert orphan[1] > 0  # every member now misassigned
 
 
-def test_recluster_closes_the_drift_loop(spark):
+def test_recluster_closes_the_drift_loop(spark, tmp_path_factory):
     """The round-9 loop-closer (mirror of round 8's compaction loop):
     drift detect -> partial re-cluster -> re-assign -> recall
     re-measure. Scenario: an external codebook re-train RELABELED two
@@ -222,7 +220,7 @@ def test_recluster_closes_the_drift_loop(spark):
          (2, [float(x) for x in 2.0 * e[2]])],
         "vec_id long, embedding array<double>",
     )
-    path = tempfile.mkdtemp(prefix="ivfrecl_") + "/index"
+    path = str(tmp_path_factory.mktemp("ivfrecl_")) + "/index"
     idx = IvfIndex.build(corpus, centroids=cents, path=path)
 
     # recall re-measure leg: B and C members as queries, exact top-5
@@ -284,7 +282,7 @@ def test_recluster_closes_the_drift_loop(spark):
         "lists_selected": 0, "members": 0, "moved": 0}
 
 
-def test_recluster_occupancy_selection_reduces_distortion(spark):
+def test_recluster_occupancy_selection_reduces_distortion(spark, tmp_path_factory):
     """The occupancy signal: an append batch that bloats ONE list is
     selected by the occupancy_ppm threshold and its centroid re-trains
     toward the shifted mass — quantization distortion (avg_cos_ppm)
@@ -308,7 +306,7 @@ def test_recluster_occupancy_selection_reduces_distortion(spark):
          (1, [float(x) for x in 2.0 * e[1]])],
         "vec_id long, embedding array<double>",
     )
-    path = tempfile.mkdtemp(prefix="ivfocc_") + "/index"
+    path = str(tmp_path_factory.mktemp("ivfocc_")) + "/index"
     idx = IvfIndex.build(base, centroids=cents, path=path)
 
     # drifted appends: 40 vectors near e1 but tilted toward e2 — all
@@ -343,13 +341,15 @@ def test_recluster_occupancy_selection_reduces_distortion(spark):
     assert sum(r.n_vectors for r in rep3) == 70
 
 
-def test_recluster_auto_selects_misassigned_and_noops_when_healthy(spark):
+def test_recluster_auto_selects_misassigned_and_noops_when_healthy(
+    spark, tmp_path_factory
+):
     """Auto-selection: a healthy index is a no-op; after an external
     codebook change (the n_misassigned > 0 signal drift_report exists
     for), recluster() with no arguments finds and repairs it."""
     emb = load_table(spark, SF_DIR, "embeddings").limit(64)
     cents = emb.filter(F.col("vec_id") % 16 == 0)
-    path = tempfile.mkdtemp(prefix="ivfauto_") + "/index"
+    path = str(tmp_path_factory.mktemp("ivfauto_")) + "/index"
     idx = IvfIndex.build(emb, centroids=cents, path=path)
     assert idx.recluster(spark) == {
         "lists_selected": 0, "members": 0, "moved": 0}

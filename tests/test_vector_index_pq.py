@@ -6,7 +6,6 @@ codes consistent, and stale/torn code tables must be refused loudly."""
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,13 +23,13 @@ from .conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
-def pq_built(spark):
+def pq_built(spark, tmp_path_factory):
     emb = load_table(spark, SF_DIR, "embeddings")
     coarse, cb = _pq_trained(spark, SF_DIR)
     idx = IvfIndex.build(
         emb,
         centroids=coarse.select(F.col("list_id").alias("vec_id"), "embedding"),
-        path=tempfile.mkdtemp(prefix="ivfpq_") + "/index",
+        path=str(tmp_path_factory.mktemp("ivfpq_")) + "/index",
     )
     idx.build_pq(spark, cb, m=8)
     return idx, emb, coarse, cb
@@ -62,18 +61,18 @@ def test_probe_adc_codes_scan_is_partition_pruned(spark, pq_built):
     assert pruned, "ADC probe must prune unprobed code partitions at the scan"
 
 
-def test_pq_append_equals_rebuild(spark):
+def test_pq_append_equals_rebuild(spark, tmp_path_factory):
     emb = load_table(spark, SF_DIR, "embeddings")
     coarse, cb = _pq_trained(spark, SF_DIR)
     cents = coarse.select(F.col("list_id").alias("vec_id"), "embedding")
     inc = IvfIndex.build(
         emb.filter(F.col("vec_id") % 2 == 0), centroids=cents,
-        path=tempfile.mkdtemp(prefix="ivfpqa_") + "/i",
+        path=str(tmp_path_factory.mktemp("ivfpqa_")) + "/i",
     )
     inc.build_pq(spark, cb, m=8)
     inc.append(emb.filter(F.col("vec_id") % 2 != 0))
     full = IvfIndex.build(
-        emb, centroids=cents, path=tempfile.mkdtemp(prefix="ivfpqb_") + "/i"
+        emb, centroids=cents, path=str(tmp_path_factory.mktemp("ivfpqb_")) + "/i"
     )
     full.build_pq(spark, cb, m=8)
     cols = ["vec_id", "list_id", "pq_code", "err_micro"]
@@ -91,14 +90,14 @@ def test_pq_append_equals_rebuild(spark):
     assert a == b and a
 
 
-def test_recluster_keeps_codes_consistent(spark):
+def test_recluster_keeps_codes_consistent(spark, tmp_path_factory):
     """After a recluster, the stored codes must equal a from-scratch
     re-encode against the updated codebooks (and probe_adc still runs)."""
     emb = load_table(spark, SF_DIR, "embeddings")
     coarse, cb = _pq_trained(spark, SF_DIR)
     cents = coarse.select(F.col("list_id").alias("vec_id"), "embedding")
     idx = IvfIndex.build(
-        emb, centroids=cents, path=tempfile.mkdtemp(prefix="ivfpqr_") + "/i"
+        emb, centroids=cents, path=str(tmp_path_factory.mktemp("ivfpqr_")) + "/i"
     )
     idx.build_pq(spark, cb, m=8)
     some_lists = sorted(
@@ -123,12 +122,12 @@ def test_recluster_keeps_codes_consistent(spark):
     ).count() > 0
 
 
-def test_probe_adc_refuses_stale_and_torn_codes(spark):
+def test_probe_adc_refuses_stale_and_torn_codes(spark, tmp_path_factory):
     emb = load_table(spark, SF_DIR, "embeddings")
     coarse, cb = _pq_trained(spark, SF_DIR)
     cents = coarse.select(F.col("list_id").alias("vec_id"), "embedding")
     idx = IvfIndex.build(
-        emb, centroids=cents, path=tempfile.mkdtemp(prefix="ivfpqg_") + "/i"
+        emb, centroids=cents, path=str(tmp_path_factory.mktemp("ivfpqg_")) + "/i"
     )
     idx.build_pq(spark, cb, m=8)
     # torn: drop one code partition (the crash window between the lists
